@@ -5,18 +5,17 @@ Reference: ``metadata.etl_audit_log`` + AuditLogger (audit_logger.py:25-285,
 Fixed here: non-destructive init (the reference drops the log on every
 AuditLogger construction — SURVEY.md §4.3), LongType row counts (§2.14#9),
 and query helpers built with the DataFrame API instead of f-string SQL
-(§2.14#4). Log writes are buffered per unit and appended once — an audit
-row per event would otherwise add a tiny file to the table per event
-(small-file problem at fleet scale).
+(§2.14#4). Events are buffered in the driver and ``flush`` appends them
+as one file: the pipeline flushes once at the end of each layer and once
+at the end of a run, so the log gains a few files per run rather than one
+per event.
 """
 
 from __future__ import annotations
 
 import getpass
-import threading
 import time
 import uuid
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.metadata.store import AppendTable, utc_now
 
 AUDIT_SCHEMA = StructType(
     [
@@ -50,68 +50,29 @@ AUDIT_SCHEMA = StructType(
 )
 
 
-def _now() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
-class AuditLogger:
+class AuditLogger(AppendTable):
     def __init__(
         self,
         spark: SparkSession,
         table_format: TableFormat,
         table: str = "metadata.etl_audit_log",
         run_id: str | None = None,
-        auto_flush: bool = True,
     ):
-        self.spark = spark
-        self.fmt = table_format
-        self.table = table
+        super().__init__(spark, table_format, table, AUDIT_SCHEMA)
         self.run_id = run_id or str(uuid.uuid4())
-        self.auto_flush = auto_flush
-        self._buffer: list[tuple] = []
         self._starts: dict[str, float] = {}
-        # Serializes buffer access + table appends: units may log from
-        # concurrent threads (pipeline max_parallel_units), and a parquet
-        # append is not transactional under concurrency.
-        self._lock = threading.RLock()
         try:
             self._user = getpass.getuser()
         except Exception:
             self._user = "unknown"
-        if not self.fmt.table_exists(spark, table):
-            self.fmt.overwrite(spark.createDataFrame([], AUDIT_SCHEMA), table)
 
     def _emit(self, **kw) -> str:
-        log_id = str(uuid.uuid4())
-        with self._lock:
-            self._buffer.append(
-                (
-                    log_id,
-                    _now(),
-                    kw.get("layer"),
-                    kw.get("operation"),
-                    kw.get("component"),
-                    kw.get("source_id"),
-                    kw.get("target_table"),
-                    kw.get("status"),
-                    kw.get("rows_processed"),
-                    kw.get("error_message"),
-                    kw.get("execution_time_seconds"),
-                    self.run_id,
-                    self._user,
-                )
-            )
-            if self.auto_flush:
-                self.flush()
-        return log_id
-
-    def flush(self) -> None:
-        with self._lock:
-            if not self._buffer:
-                return
-            df = self.spark.createDataFrame(self._buffer, AUDIT_SCHEMA)
-            self.fmt.append(df, self.table)
-            self._buffer.clear()
+        kw.update(
+            log_id=str(uuid.uuid4()), timestamp=utc_now(),
+            run_id=self.run_id, user=self._user,
+        )
+        self.add([tuple(kw.get(name) for name in AUDIT_SCHEMA.names)])
+        return kw["log_id"]
 
     # -- event API (reference audit_logger.py:76-217) -----------------------
 
@@ -153,16 +114,14 @@ class AuditLogger:
     # -- query helpers (reference audit_logger.py:241-285) ------------------
 
     def recent(self, n: int = 100, layer: str | None = None) -> DataFrame:
-        df = self.fmt.read(self.spark, self.table)
+        df = self.read()
         if layer:
             df = df.filter(F.col("layer") == layer)
         # ORDER BY ts DESC LIMIT n → TakeOrderedAndProject (true top-k)
         return df.orderBy(F.desc("timestamp"), F.desc("log_id")).limit(n)
 
     def run_summary(self, run_id: str | None = None) -> DataFrame:
-        df = self.fmt.read(self.spark, self.table).filter(
-            F.col("run_id") == (run_id or self.run_id)
-        )
+        df = self.read().filter(F.col("run_id") == (run_id or self.run_id))
         return df.groupBy("layer", "status").agg(
             F.count(F.lit(1)).alias("events"),
             F.sum("rows_processed").alias("rows"),

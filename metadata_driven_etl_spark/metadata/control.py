@@ -6,22 +6,20 @@ Differences by design:
 - **Non-destructive init**: CREATE IF NOT EXISTS — the reference DROPs and
   recreates its metadata tables on every pipeline run AND on every
   AuditLogger construction, destroying all history (SURVEY.md §4.3).
-- **Upserts are DataFrame merges**, not f-string-interpolated UPDATE/INSERT
-  SQL (injection hazard, §2.14#4).
+- **Upserts replace rows of a driver-side mirror** and rewrite the tiny
+  table from it (``metadata.store.KeyedTable``), not f-string-interpolated
+  UPDATE/INSERT SQL (injection hazard, §2.14#4).
 - **records_processed is LONG** (the reference's IntegerType overflows at
   2^31 rows — §2.14#9; this engine targets 100 TB).
-- **get_last_run_date uses MAX()** explicitly rather than result[0] of an
-  unordered scan (§2.14#5).
+- **Lookups read the (table, layer) row of the mirror**, with no Spark
+  job, rather than result[0] of an unordered scan (§2.14#5).
 """
 
 from __future__ import annotations
 
 import json
-import threading
-from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Row, SparkSession
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -31,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.metadata.store import KeyedTable, utc_now
 
 CONTROL_SCHEMA = StructType(
     [
@@ -45,26 +44,11 @@ CONTROL_SCHEMA = StructType(
 )
 
 
-class ControlTable:
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_format: TableFormat,
-        table: str = "metadata.etl_control_table",
-    ):
-        self.spark = spark
-        self.fmt = table_format
-        self.table = table
-        # update_run is read-modify-overwrite (parquet merge): reads and
-        # writes from concurrent pipeline units must serialize or a reader
-        # can scan the table mid-overwrite / an update can be lost.
-        self._lock = threading.RLock()
-        self._ensure()
-
-    def _ensure(self) -> None:
-        if not self.fmt.table_exists(self.spark, self.table):
-            empty = self.spark.createDataFrame([], CONTROL_SCHEMA)
-            self.fmt.overwrite(empty, self.table)
+class ControlTable(KeyedTable):
+    def __init__(self, spark: SparkSession, table_format: TableFormat,
+                 table: str = "metadata.etl_control_table"):
+        super().__init__(spark, table_format, table, CONTROL_SCHEMA,
+                         ("table_name", "layer"))
 
     def update_run(
         self,
@@ -75,47 +59,18 @@ class ControlTable:
         status: str,
         config_snapshot: dict | None = None,
     ) -> None:
-        row = [
-            (
-                table_name,
-                layer,
-                run_date,
-                int(records_processed),
-                status,
-                json.dumps(config_snapshot or {}, default=str),
-                datetime.now(timezone.utc).replace(tzinfo=None),
-            )
-        ]
-        src = self.spark.createDataFrame(row, CONTROL_SCHEMA)
-        with self._lock:
-            self.fmt.merge(self.spark, self.table, src, keys=["table_name", "layer"])
+        snapshot = json.dumps(config_snapshot or {}, default=str)
+        self.upsert([(table_name, layer, run_date, int(records_processed),
+                      status, snapshot, utc_now())])
 
     def get_last_run_date(self, table_name: str, layer: str) -> str | None:
-        with self._lock:
-            rows = (
-                self.fmt.read(self.spark, self.table)
-                .filter(
-                    (F.col("table_name") == table_name)
-                    & (F.col("layer") == layer)
-                    & (F.col("status") == "success")
-                )
-                .agg(F.max("last_run_date").alias("d"))
-                .collect()
-            )
-        return rows[0]["d"] if rows else None
+        row = self.get((table_name, layer))
+        if row is None or row["status"] != "success":
+            return None
+        return row["last_run_date"]
 
-    def get_state(self, table_name: str, layer: str):
-        with self._lock:
-            rows = (
-                self.fmt.read(self.spark, self.table)
-                .filter(
-                    (F.col("table_name") == table_name) & (F.col("layer") == layer)
-                )
-                .collect()
-            )
-        return rows[0] if rows else None
+    def get_state(self, table_name: str, layer: str) -> Row | None:
+        return self.get((table_name, layer))
 
     def all_states(self):
-        return self.fmt.read(self.spark, self.table).orderBy(
-            "layer", "table_name"
-        )
+        return self.read().orderBy("layer", "table_name")

@@ -4,15 +4,13 @@ Reference: ``metadata.data_quality_metrics`` (silver_schemas.py:72-85 — the
 reference defines the table but its write is commented out,
 silver_layer.py:129-139) and ``metadata.data_dictionary``
 (gold_schemas.py:63-72, populated only by dead code gold_layer.py:215-254).
-Both are live here.
+Both are live here, on the commit helper in ``metadata.store``.
 """
 
 from __future__ import annotations
 
-import threading
-from datetime import datetime, timezone
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -24,6 +22,7 @@ from pyspark.sql.types import (
 
 from metadata_driven_etl_spark.dq.engine import DQRuleMetrics
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.metadata.store import AppendTable, KeyedTable, utc_now
 
 DQ_METRICS_SCHEMA = StructType(
     [
@@ -52,69 +51,47 @@ DICTIONARY_SCHEMA = StructType(
 )
 
 
-def _now() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
-class DQMetricsStore:
+class DQMetricsStore(AppendTable):
     def __init__(self, spark: SparkSession, table_format: TableFormat,
                  table: str = "metadata.data_quality_metrics"):
-        self.spark = spark
-        self.fmt = table_format
-        self.table = table
-        self._lock = threading.RLock()  # concurrent units append here
-        if not self.fmt.table_exists(spark, table):
-            self.fmt.overwrite(spark.createDataFrame([], DQ_METRICS_SCHEMA), table)
+        super().__init__(spark, table_format, table, DQ_METRICS_SCHEMA)
 
     def record(self, table_name: str, run_date: str,
                metrics: list[DQRuleMetrics]) -> None:
         if not metrics:
             return
-        rows = [
-            (
-                table_name, m.rule_name, m.rule_type, m.action,
-                m.total_count, m.valid_count, m.invalid_count, m.is_valid,
-                run_date, _now(),
-            )
+        self.add([
+            (table_name, m.rule_name, m.rule_type, m.action, m.total_count,
+             m.valid_count, m.invalid_count, m.is_valid, run_date, utc_now())
             for m in metrics
-        ]
-        with self._lock:
-            self.fmt.append(
-                self.spark.createDataFrame(rows, DQ_METRICS_SCHEMA), self.table
-            )
+        ])
+        self.flush()
 
     def history(self, table_name: str | None = None) -> DataFrame:
-        df = self.fmt.read(self.spark, self.table)
+        df = self.read()
         if table_name:
-            from pyspark.sql import functions as F
-
             df = df.filter(F.col("table_name") == table_name)
         return df
 
 
-class DataDictionary:
+class DataDictionary(KeyedTable):
     def __init__(self, spark: SparkSession, table_format: TableFormat,
                  table: str = "metadata.data_dictionary"):
-        self.spark = spark
-        self.fmt = table_format
-        self.table = table
-        self._lock = threading.RLock()  # concurrent units register here
-        if not self.fmt.table_exists(spark, table):
-            self.fmt.overwrite(spark.createDataFrame([], DICTIONARY_SCHEMA), table)
+        super().__init__(spark, table_format, table, DICTIONARY_SCHEMA,
+                         ("table_name", "column_name"))
 
     def register(self, table_name: str, df: DataFrame,
                  descriptions: dict[str, str] | None = None) -> None:
         """Register a table's live schema (reference register_table_schema,
-        metadata_manager.py:273-328), upserting per (table, column)."""
+        metadata_manager.py:273-328), upserting per (table, column) the
+        columns whose type, nullability or description changed."""
         descriptions = descriptions or {}
+        now = utc_now()
         rows = [
-            (
-                table_name, f.name, f.dataType.simpleString(), f.nullable,
-                descriptions.get(f.name), _now(),
-            )
+            (table_name, f.name, f.dataType.simpleString(), f.nullable,
+             descriptions.get(f.name), now)
             for f in df.schema.fields
         ]
-        src = self.spark.createDataFrame(rows, DICTIONARY_SCHEMA)
-        with self._lock:
-            self.fmt.merge(self.spark, self.table, src,
-                           keys=["table_name", "column_name"])
+        changed = [r for r in rows if (self.get(r[:2]) or ())[2:5] != r[2:5]]
+        if changed:
+            self.upsert(changed)

@@ -137,14 +137,21 @@ class _LayerBase:
         job runs. With ``default: max_parallel_units: N`` in config, units
         are submitted from N threads: Spark's scheduler interleaves the
         jobs across executors (thread-safe by design), per-unit isolation
-        and result order are preserved, and the metadata plane serializes
-        its table writes internally (each store locks around its
-        non-transactional parquet read-modify-write). Units sharing a
-        target table (e.g. two bronze sources appending into one table)
+        and result order are preserved, and each metadata store serializes
+        its commits under its own lock (``metadata.store``). Units sharing
+        a target table (e.g. two bronze sources appending into one table)
         stay sequential with each other — only cross-target parallelism is
         exploited, so no data table ever sees concurrent writers.
+
+        The audit rows the units buffered are appended once, when the
+        layer ends, even when it ends by raising.
         """
-        units = list(units)
+        try:
+            return self._run_unit_groups(list(units), runner)
+        finally:
+            self.ctx.audit.flush()
+
+    def _run_unit_groups(self, units: list, runner) -> list[UnitResult]:
         workers = int(self.config.defaults.extra.get("max_parallel_units", 1))
         if workers <= 1 or len(units) <= 1:
             return [self._run_unit(u, runner) for u in units]
@@ -512,7 +519,9 @@ class GoldLayer(_LayerBase):
         if m.refresh_type == "incremental" and fmt.table_exists(
             spark, m.target_table
         ):
-            # MERGE path: count the source once, then upsert
+            # MERGE path: run the model once; the count, the key check and
+            # the upsert all read the checkpoint
+            df = df.localCheckpoint(eager=True)
             rows = df.count()
             fmt.merge(spark, m.target_table, df, list(m.primary_keys))
         else:

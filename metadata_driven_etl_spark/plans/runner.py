@@ -46,39 +46,42 @@ def run_pipeline(
         spark=spark, table_format=table_format or get_table_format()
     )
     results: dict[str, list[UnitResult]] = {}
-    for layer in layers:
-        if layer == "corpus":
-            # corpus pipelines live in their own config file/model (the
-            # training-data counterpart of the ETL layers)
-            cpath = os.path.join(config_dir, "corpus_config.yaml")
-            if not os.path.exists(cpath):
-                continue
-            from metadata_driven_etl_spark.plans.corpus import CorpusLayer
+    try:
+        for layer in layers:
+            if layer == "corpus":
+                # corpus pipelines live in their own config file/model (the
+                # training-data counterpart of the ETL layers)
+                cpath = os.path.join(config_dir, "corpus_config.yaml")
+                if not os.path.exists(cpath):
+                    continue
+                from metadata_driven_etl_spark.plans.corpus import CorpusLayer
 
-            layer_cls, layer_cfg = CorpusLayer, load_corpus_config(cpath)
-        elif layer in configs:
-            layer_cls, layer_cfg = LAYER_CLASSES[layer], configs[layer]
-        else:
-            continue
-        t0 = time.perf_counter()
-        ctx.audit.log_start(layer, "layer_run", f"{layer}_layer")
-        layer_results = layer_cls(ctx, layer_cfg).run(run_date)
-        results[layer] = layer_results
-        rows = sum(r.rows for r in layer_results)
-        errs = [r for r in layer_results if r.status == "error"]
-        if errs:
-            ctx.audit.log_error(
-                layer, "layer_run", f"{layer}_layer",
-                f"{len(errs)} unit(s) failed: {[r.unit_id for r in errs]}",
+                layer_cls, layer_cfg = CorpusLayer, load_corpus_config(cpath)
+            elif layer in configs:
+                layer_cls, layer_cfg = LAYER_CLASSES[layer], configs[layer]
+            else:
+                continue
+            t0 = time.perf_counter()
+            ctx.audit.log_start(layer, "layer_run", f"{layer}_layer")
+            layer_results = layer_cls(ctx, layer_cfg).run(run_date)
+            results[layer] = layer_results
+            rows = sum(r.rows for r in layer_results)
+            errs = [r for r in layer_results if r.status == "error"]
+            if errs:
+                ctx.audit.log_error(
+                    layer, "layer_run", f"{layer}_layer",
+                    f"{len(errs)} unit(s) failed: {[r.unit_id for r in errs]}",
+                )
+            else:
+                ctx.audit.log_success(
+                    layer, "layer_run", f"{layer}_layer", rows_processed=rows
+                )
+            print(
+                f"[{layer}] {len(layer_results)} unit(s), {rows} rows, "
+                f"{len(errs)} error(s), {time.perf_counter() - t0:.1f}s"
             )
-        else:
-            ctx.audit.log_success(
-                layer, "layer_run", f"{layer}_layer", rows_processed=rows
-            )
-        print(
-            f"[{layer}] {len(layer_results)} unit(s), {rows} rows, "
-            f"{len(errs)} error(s), {time.perf_counter() - t0:.1f}s"
-        )
+    finally:
+        ctx.audit.flush()  # the last layer_run row
     return results
 
 
