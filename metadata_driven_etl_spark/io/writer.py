@@ -190,6 +190,25 @@ def _ensure_database(spark: SparkSession, table: str) -> None:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
 
 
+def partition_columns(spark: SparkSession, table: str) -> list[str]:
+    """The partition columns of a managed table, in spec order, from the
+    ``# Partition Information`` section of ``DESCRIBE TABLE``. A command
+    returns its rows as a local relation, so this starts no Spark job,
+    while ``spark.catalog.listColumns`` runs one per partition of its
+    result."""
+    names = [r.col_name for r in spark.sql(f"DESCRIBE TABLE {table}").collect()]
+    if "# Partition Information" not in names:
+        return []
+    # skip the section title and its "# col_name" header row
+    section = names[names.index("# Partition Information") + 2:]
+    cols = []
+    for name in section:
+        if not name or name.startswith("#"):
+            break
+        cols.append(name)
+    return cols
+
+
 class TableFormat:
     """Base: catalog-managed tables via saveAsTable in a given format."""
 
@@ -315,35 +334,35 @@ class TableFormat:
 
     def merge(
         self, spark: SparkSession, table: str, source: DataFrame, keys: Sequence[str]
-    ) -> None:
+    ) -> int:
         """Upsert ``source`` into ``table`` on key equality
-        (WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT ALL).
-        Raises DuplicateSourceKeysError on a non-unique source — same
-        contract as Delta's native MERGE."""
+        (WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT ALL) and return
+        the source row count. Raises DuplicateSourceKeysError on a
+        non-unique source — same contract as Delta's native MERGE. An
+        empty source leaves an existing table untouched."""
         from metadata_driven_etl_spark.operators.merge import (
             upsert,
             validate_unique_keys,
         )
 
-        validate_unique_keys(source, keys)
+        rows = validate_unique_keys(source, keys)
         if not self.table_exists(spark, table):
             self.overwrite(source, table)
-            return
+            return rows
+        if not rows:
+            return 0
         target = self.read(spark, table)
         # Materialize before overwriting the files we read from.
         merged = upsert(target, source, keys).localCheckpoint(eager=True)
         # Re-apply the table's existing partition spec: the rewrite path
         # would otherwise silently flatten a partitioned gold table on its
         # first incremental merge.
-        parts = [
-            c.name for c in spark.catalog.listColumns(table) if c.isPartition
-        ]
-        self.overwrite(merged, table, parts or None)
+        self.overwrite(merged, table, partition_columns(spark, table) or None)
         # The rewrite replaced every data file; a reader that resolved the
-        # table before this merge (e.g. between micro-batches of a
-        # streaming upsert sink) would otherwise hit the cached file
+        # table before this merge would otherwise hit the cached file
         # listing and FAILED_READ_FILE on the vanished parts.
         spark.catalog.refreshTable(table)
+        return rows
 
 
 class ParquetFormat(TableFormat):
@@ -360,7 +379,7 @@ class DeltaFormat(TableFormat):
 
     def merge(
         self, spark: SparkSession, table: str, source: DataFrame, keys: Sequence[str]
-    ) -> None:
+    ) -> int:
         from delta.tables import DeltaTable  # gated import
 
         from metadata_driven_etl_spark.operators.merge import (
@@ -369,10 +388,12 @@ class DeltaFormat(TableFormat):
 
         # Delta raises only when duplicates MATCH a target row; unmatched
         # duplicates would insert twice — enforce the uniform contract.
-        validate_unique_keys(source, keys)
+        rows = validate_unique_keys(source, keys)
         if not self.table_exists(spark, table):
             self.overwrite(source, table)
-            return
+            return rows
+        if not rows:
+            return 0
         cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
         (
             DeltaTable.forName(spark, table)
@@ -382,6 +403,7 @@ class DeltaFormat(TableFormat):
             .whenNotMatchedInsertAll()
             .execute()
         )
+        return rows
 
 
 def delta_available() -> bool:

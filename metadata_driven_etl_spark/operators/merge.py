@@ -30,22 +30,24 @@ class DuplicateSourceKeysError(ValueError):
     duplicate rows instead)."""
 
 
-def validate_unique_keys(source: DataFrame, keys: Sequence[str]) -> None:
-    """Raise :class:`DuplicateSourceKeysError` if ``source`` is not unique
-    per key. One aggregation job over the (typically small, incremental)
-    source batch; ``limit(1)`` short-circuits the collect."""
-    dup = (
-        source.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        kv = {k: dup[0][k] for k in keys}
+def validate_unique_keys(source: DataFrame, keys: Sequence[str]) -> int:
+    """Return the row count of ``source``; raise
+    :class:`DuplicateSourceKeysError` if it is not unique per key. One
+    aggregate over the (typically small, incremental) source batch finds
+    the count, the largest per-key count and a key that has it, so the
+    check and the count cost one collect."""
+    per_key = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+    stats = per_key.agg(
+        F.sum("_n").alias("rows"),
+        F.max("_n").alias("worst"),
+        F.max_by(F.struct(*keys), "_n").alias("key"),
+    ).first()
+    if stats["worst"] is not None and stats["worst"] > 1:
         raise DuplicateSourceKeysError(
-            f"merge source has {dup[0]['_n']} rows for key {kv}"
+            f"merge source has {stats['worst']} rows for key "
+            f"{stats['key'].asDict()}"
         )
+    return stats["rows"] or 0
 
 
 def upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFrame:

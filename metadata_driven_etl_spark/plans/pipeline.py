@@ -519,11 +519,10 @@ class GoldLayer(_LayerBase):
         if m.refresh_type == "incremental" and fmt.table_exists(
             spark, m.target_table
         ):
-            # MERGE path: run the model once; the count, the key check and
-            # the upsert all read the checkpoint
+            # MERGE path: run the model once; the key check (which also
+            # counts) and the upsert both read the checkpoint
             df = df.localCheckpoint(eager=True)
-            rows = df.count()
-            fmt.merge(spark, m.target_table, df, list(m.primary_keys))
+            rows = fmt.merge(spark, m.target_table, df, list(m.primary_keys))
         else:
             rows = _counted_write(
                 df,

@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.io.writer import TableFormat
 from metadata_driven_etl_spark.operators.merge import apply_signed_delta
-from metadata_driven_etl_spark.streaming.sink import refresh_owner_tables
+from metadata_driven_etl_spark.streaming.sink import (
+    persisted,
+    refresh_owner_tables,
+)
 
 _OPS = ("insert", "delete")
 
@@ -77,8 +80,11 @@ def agg_maintenance_stream(
     owner = stream_df.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        with persisted(batch_df) as batch:
+            if not batch.isEmpty():
+                _apply(batch, batch_id)
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # op → ±1 inline, NULL-safe and loud: any value outside
         # {insert, delete} (NULL included) raises from raise_error during

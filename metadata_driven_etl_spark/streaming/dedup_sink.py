@@ -43,7 +43,10 @@ from metadata_driven_etl_spark.operators.dedup import (
     incremental_dedup_survivors,
     lsh_bands,
 )
-from metadata_driven_etl_spark.streaming.sink import refresh_owner_tables
+from metadata_driven_etl_spark.streaming.sink import (
+    persisted,
+    refresh_owner_tables,
+)
 
 
 def dedup_stream(
@@ -68,8 +71,11 @@ def dedup_stream(
     owner = stream_df.sparkSession
 
     def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        with persisted(batch_df) as batch:
+            if not batch.isEmpty():
+                _screen(batch, batch_id)
+
+    def _screen(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
 
         # Pre-existing tables written before the per-table guard (or

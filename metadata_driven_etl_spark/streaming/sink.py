@@ -1,13 +1,32 @@
-"""Streaming upsert sink: foreachBatch → TableFormat.merge.
+"""Streaming upsert sink: foreachBatch → upsert into a managed table.
 
 The canonical streaming-medallion ingest pattern: a streaming aggregation
 (update semantics) lands in a managed table by MERGE-ing each micro-batch,
 so the table always holds the latest value per key — the streaming
 counterpart of the gold layer's incremental refresh (plans/pipeline.py).
 
-Scale notes: each micro-batch merge touches only the keys present in that
-batch (Delta prunes to matching files; the parquet fallback rewrites the
-table — fine for compact aggregate tables, use Delta for big ones).
+Cost per micro-batch: the batch is persisted, and its first action is the
+key check (``operators.merge.validate_unique_keys``), which runs the
+stateful plan once, fills the cache and returns the row count. An empty
+batch stops there and writes nothing; a batch with a duplicate key raises
+``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The rest
+reads the cache.
+
+The mirror: on the parquet fallback each query keeps the target's rows
+as a local checkpoint, loaded from the table on the first batch that has
+rows (empty when the table does not exist yet). A batch computes
+``upsert(mirror, batch)`` at the mirror's partition count, checkpoints
+it lazily and overwrites the table with it, keeping the table's partition
+spec: one write job computes, checkpoints and writes the result, and no
+table file is read, so the overwrite cannot delete files its own plan
+still reads. The mirror moves to the new frame only once the overwrite
+has returned, and the old frame's blocks are then released. Delta
+targets skip the mirror and use Delta's file-pruned native MERGE on the
+persisted batch.
+
+Single-writer contract: while the query runs it owns its target. A
+write from anywhere else is not in the mirror and is overwritten by the
+next batch. A restarted query reloads the mirror from the table.
 Checkpointing makes the sink exactly-once per micro-batch id: on restart,
 a replayed batch re-merges the same rows idempotently (upsert is
 idempotent for deterministic aggregates).
@@ -15,11 +34,17 @@ idempotent for deterministic aggregates).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.io.writer import (
+    DeltaFormat,
+    TableFormat,
+    partition_columns,
+)
+from metadata_driven_etl_spark.operators import merge as merge_ops
 
 
 def refresh_owner_tables(owner, *tables: str) -> None:
@@ -39,6 +64,25 @@ def refresh_owner_tables(owner, *tables: str) -> None:
             pass
 
 
+@contextmanager
+def persisted(batch_df: DataFrame) -> Iterator[DataFrame]:
+    """Cache a micro-batch for the length of the block, so every action
+    after the first reads the cache instead of running the batch's
+    (possibly stateful) plan again — the foreachBatch docs' advice."""
+    batch_df.persist()
+    try:
+        yield batch_df
+    finally:
+        batch_df.unpersist()
+
+
+def _release_checkpoint(frame: DataFrame) -> None:
+    """Drop the blocks of a frame made by ``localCheckpoint``.
+    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
+    under the frame's ``LogicalRDD`` plan."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def merge_stream(
     stream_df: DataFrame,
     table: str,
@@ -52,18 +96,44 @@ def merge_stream(
 
     ``stream_df`` is typically a streaming aggregation keyed by ``keys``;
     with ``update`` output mode each micro-batch carries only changed keys.
-    Returns the StreamingQuery (caller awaits/stops).
+    The query owns ``table`` while it runs (module docstring). Returns the
+    StreamingQuery (caller awaits/stops).
     """
     keys = list(keys)
     owner = stream_df.sparkSession
+    mirror: DataFrame | None = None
+    loaded = False
+    partition_by: list[str] | None = None
+    num_files = 1
+
+    def rewrite_from_mirror(batch: DataFrame) -> None:
+        nonlocal mirror, loaded, partition_by, num_files
+        spark = batch.sparkSession
+        if not loaded:
+            if table_format.table_exists(spark, table):
+                mirror = table_format.read(spark, table).localCheckpoint(eager=True)
+                partition_by = partition_columns(spark, table) or None
+                num_files = max(mirror.rdd.getNumPartitions(), 1)
+            loaded = True
+        if mirror is None:
+            merged = batch
+            num_files = batch.rdd.getNumPartitions()
+        else:
+            merged = merge_ops.upsert(mirror, batch, keys).coalesce(num_files)
+        merged = merged.localCheckpoint(eager=False)
+        table_format.overwrite(merged, table, partition_by)
+        previous, mirror = mirror, merged
+        if previous is not None:
+            _release_checkpoint(previous)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # one source row per key per batch (aggregation output); guard
-        # anyway — merge requires unique source keys
-        src = batch_df.dropDuplicates(keys)
-        table_format.merge(batch_df.sparkSession, table, src, keys)
+        with persisted(batch_df) as batch:
+            if not merge_ops.validate_unique_keys(batch, keys):
+                return
+            if isinstance(table_format, DeltaFormat):
+                table_format.merge(batch.sparkSession, table, batch, keys)
+            else:
+                rewrite_from_mirror(batch)
         refresh_owner_tables(owner, table)
 
     writer = (

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.io.writer import ParquetFormat
+from metadata_driven_etl_spark.io.writer import ParquetFormat, partition_columns
 
 
 @pytest.fixture(scope="module")
@@ -67,8 +67,23 @@ def test_merge_preserves_partition_spec(spark, fmt):
         c.name for c in spark.catalog.listColumns(tbl) if c.isPartition
     ]
     assert parts == ["region"], "merge dropped the partition spec"
+    assert partition_columns(spark, tbl) == parts
     got = {(r.id, r.amt) for r in spark.table(tbl).collect()}
     assert got == {(1, 99.0), (2, 20.0), (3, 30.0)}
+
+
+def test_merge_returns_source_count_and_skips_empty_source(spark, fmt):
+    """The key check also counts the source: merge returns that count, and
+    an empty source leaves an existing table's files untouched."""
+    tbl = "default.wp_merge_count"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    src = spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")])
+    assert fmt.merge(spark, tbl, src, keys=["id"]) == 2
+    files = set(spark.table(tbl).inputFiles())
+    assert fmt.merge(spark, tbl, src.limit(0), keys=["id"]) == 0
+    assert set(spark.table(tbl).inputFiles()) == files
+    assert fmt.merge(spark, tbl, src.limit(1), keys=["id"]) == 1
+    assert {(r.id, r.v) for r in spark.table(tbl).collect()} == {(1, "a"), (2, "b")}
 
 
 def test_merge_rejects_duplicate_source_keys(spark, fmt):
@@ -82,7 +97,7 @@ def test_merge_rejects_duplicate_source_keys(spark, fmt):
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     fmt.overwrite(spark.createDataFrame([Row(id=1, v="x")]), tbl)
     dup_src = spark.createDataFrame([Row(id=1, v="a"), Row(id=1, v="b")])
-    with pytest.raises(DuplicateSourceKeysError):
+    with pytest.raises(DuplicateSourceKeysError, match=r"2 rows for key \{'id': 1\}"):
         fmt.merge(spark, tbl, dup_src, keys=["id"])
 
 
