@@ -19,7 +19,7 @@ table history (fixes the reference's silent history loss, §2.14#7).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -364,6 +364,105 @@ class TableFormat:
         spark.catalog.refreshTable(table)
         return rows
 
+    def stream_merger(
+        self, table: str, keys: Sequence[str]
+    ) -> Callable[[DataFrame], int]:
+        """A merge function for one writer that upserts into ``table`` batch
+        after batch and owns it meanwhile (a streaming upsert sink). It
+        takes a source frame and returns its row count, like :meth:`merge`.
+        Here it is :meth:`MirroredTable.merge`, so no batch reads the
+        table's files; ``DeltaFormat`` uses its native MERGE instead."""
+        return MirroredTable(self, table, keys).merge
+
+
+class MirroredTable:
+    """A single writer's copy of a keyed managed table, kept as a local
+    checkpoint so each upsert rewrites the table from it without reading
+    the table's files.
+
+    The rows are read from the table once, lazily, on the first merge that
+    has a source row (nothing when the table does not exist; the first
+    write creates it), together with its partition spec. Each merge
+    computes ``upsert(rows, source)`` at the rows' partition count, so the
+    files per write do not grow, and checkpoints it EAGERLY before the
+    overwrite: ``saveAsTable`` drops the table before its write job runs,
+    so any failure while computing the upsert (a task error, or lost
+    checkpoint blocks) fails the merge with the table still intact. The
+    rows move to the new checkpoint only once the overwrite has returned,
+    and the old checkpoint's blocks are then released.
+
+    Only the writer's own merges are in the copy: a write to the table
+    from anywhere else is overwritten by the next merge.
+
+    Size: the copy is the whole table, held in executor block storage
+    (memory, spilling to disk) for the writer's life, and every merge
+    rewrites the whole table, so both costs grow with the table. On 4
+    vCPUs (local mode), with 50-key sources, one run each: 50 / 100k /
+    1M-row tables took 1.24 / 1.01 / 1.66 s per merge at a peak RSS of
+    1481 / 1549 / 1985 MB, against 1.41 / 1.39 / 2.18 s and 1404 / 1534 /
+    2256 MB for :meth:`TableFormat.merge`. Larger tables are unmeasured;
+    they belong on a format with a file-pruned MERGE (Delta)."""
+
+    def __init__(
+        self, table_format: TableFormat, table: str, keys: Sequence[str]
+    ) -> None:
+        self.table_format = table_format
+        self.table = table
+        self.keys = list(keys)
+        self._loaded = False
+        self._rows: DataFrame | None = None
+        self._num_files = 1
+        self._partition_by: list[str] | None = None
+        self._release: Callable[[], None] = lambda: None
+
+    def merge(self, source: DataFrame) -> int:
+        """Upsert ``source`` (unique per key, else DuplicateSourceKeysError)
+        into the table and return its row count; an empty source writes
+        nothing."""
+        from metadata_driven_etl_spark.operators.merge import (
+            upsert,
+            validate_unique_keys,
+        )
+
+        rows = validate_unique_keys(source, self.keys)
+        if not rows:
+            return 0
+        if not self._loaded:
+            self._load(source.sparkSession)
+        if self._rows is None:
+            merged = source
+            self._num_files = max(source.rdd.getNumPartitions(), 1)
+        else:
+            merged = upsert(self._rows, source, self.keys).coalesce(self._num_files)
+        merged, release = _local_checkpoint(merged)
+        try:
+            self.table_format.overwrite(merged, self.table, self._partition_by)
+        except Exception:
+            release()
+            raise
+        self._release()
+        self._rows, self._release = merged, release
+        return rows
+
+    def _load(self, spark: SparkSession) -> None:
+        if self.table_format.table_exists(spark, self.table):
+            # a plain read: the first merge's checkpoint reads the files
+            # once, before its overwrite replaces them
+            self._rows = self.table_format.read(spark, self.table)
+            self._num_files = max(self._rows.rdd.getNumPartitions(), 1)
+            self._partition_by = partition_columns(spark, self.table) or None
+        self._loaded = True
+
+
+def _local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+    """``df.localCheckpoint(eager=True)`` and a function that drops its
+    blocks. ``DataFrame.unpersist`` does not reach them: they belong to the
+    checkpointed RDD, which the new frame's plan (a ``LogicalRDD``) holds,
+    so the handle is taken here, where the frame is made."""
+    checkpoint = df.localCheckpoint(eager=True)
+    rdd = checkpoint._jdf.queryExecution().logical().rdd()
+    return checkpoint, lambda: rdd.unpersist(False)
+
 
 class ParquetFormat(TableFormat):
     """Parquet-backed managed tables (harness default — no delta jars)."""
@@ -404,6 +503,13 @@ class DeltaFormat(TableFormat):
             .execute()
         )
         return rows
+
+    def stream_merger(
+        self, table: str, keys: Sequence[str]
+    ) -> Callable[[DataFrame], int]:
+        """Native MERGE per batch: file-pruned, so no copy of the table is
+        kept."""
+        return lambda source: self.merge(source.sparkSession, table, source, keys)
 
 
 def delta_available() -> bool:

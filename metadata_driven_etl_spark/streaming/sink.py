@@ -5,24 +5,25 @@ The canonical streaming-medallion ingest pattern: a streaming aggregation
 so the table always holds the latest value per key — the streaming
 counterpart of the gold layer's incremental refresh (plans/pipeline.py).
 
-Cost per micro-batch: the batch is persisted, and its first action is the
-key check (``operators.merge.validate_unique_keys``), which runs the
-stateful plan once, fills the cache and returns the row count. An empty
-batch stops there and writes nothing; a batch with a duplicate key raises
-``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The rest
-reads the cache.
+Cost per micro-batch: the batch is persisted, and the merge's first
+action is the key check (``operators.merge.validate_unique_keys``), which
+runs the stateful plan once, fills the cache and returns the row count. An
+empty batch stops there and writes nothing; a batch with a duplicate key
+raises ``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The
+rest reads the cache.
 
-The mirror: on the parquet fallback each query keeps the target's rows
-as a local checkpoint, loaded from the table on the first batch that has
-rows (empty when the table does not exist yet). A batch computes
-``upsert(mirror, batch)`` at the mirror's partition count, checkpoints
-it lazily and overwrites the table with it, keeping the table's partition
-spec: one write job computes, checkpoints and writes the result, and no
-table file is read, so the overwrite cannot delete files its own plan
-still reads. The mirror moves to the new frame only once the overwrite
-has returned, and the old frame's blocks are then released. Delta
-targets skip the mirror and use Delta's file-pruned native MERGE on the
-persisted batch.
+The merge is ``table_format.stream_merger``. On the parquet fallback that
+is an ``io.writer.MirroredTable``: the query keeps the target's rows as a
+local checkpoint, read from the table once, upserts each batch into it,
+checkpoints the result before the overwrite (so a failed batch leaves the
+table intact) and overwrites the table from it, keeping its partition
+spec. No table file is read per batch: four Spark jobs (key check,
+broadcast of the batch keys, checkpoint, write) and one file per batch on
+an unpartitioned target. The copy is the whole target and each batch
+rewrites all of it, so time and memory grow with the target's size: the
+streaming benchmark's target has about 50 rows, and ``MirroredTable``
+gives the figures measured up to 1M rows. Delta targets use Delta's
+file-pruned native MERGE on the persisted batch instead.
 
 Single-writer contract: while the query runs it owns its target. A
 write from anywhere else is not in the mirror and is overwritten by the
@@ -39,12 +40,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-from metadata_driven_etl_spark.io.writer import (
-    DeltaFormat,
-    TableFormat,
-    partition_columns,
-)
-from metadata_driven_etl_spark.operators import merge as merge_ops
+from metadata_driven_etl_spark.io.writer import TableFormat
 
 
 def refresh_owner_tables(owner, *tables: str) -> None:
@@ -76,13 +72,6 @@ def persisted(batch_df: DataFrame) -> Iterator[DataFrame]:
         batch_df.unpersist()
 
 
-def _release_checkpoint(frame: DataFrame) -> None:
-    """Drop the blocks of a frame made by ``localCheckpoint``.
-    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
-    under the frame's ``LogicalRDD`` plan."""
-    frame._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
 def merge_stream(
     stream_df: DataFrame,
     table: str,
@@ -99,41 +88,13 @@ def merge_stream(
     The query owns ``table`` while it runs (module docstring). Returns the
     StreamingQuery (caller awaits/stops).
     """
-    keys = list(keys)
     owner = stream_df.sparkSession
-    mirror: DataFrame | None = None
-    loaded = False
-    partition_by: list[str] | None = None
-    num_files = 1
-
-    def rewrite_from_mirror(batch: DataFrame) -> None:
-        nonlocal mirror, loaded, partition_by, num_files
-        spark = batch.sparkSession
-        if not loaded:
-            if table_format.table_exists(spark, table):
-                mirror = table_format.read(spark, table).localCheckpoint(eager=True)
-                partition_by = partition_columns(spark, table) or None
-                num_files = max(mirror.rdd.getNumPartitions(), 1)
-            loaded = True
-        if mirror is None:
-            merged = batch
-            num_files = batch.rdd.getNumPartitions()
-        else:
-            merged = merge_ops.upsert(mirror, batch, keys).coalesce(num_files)
-        merged = merged.localCheckpoint(eager=False)
-        table_format.overwrite(merged, table, partition_by)
-        previous, mirror = mirror, merged
-        if previous is not None:
-            _release_checkpoint(previous)
+    merge_batch = table_format.stream_merger(table, keys)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         with persisted(batch_df) as batch:
-            if not merge_ops.validate_unique_keys(batch, keys):
+            if not merge_batch(batch):
                 return
-            if isinstance(table_format, DeltaFormat):
-                table_format.merge(batch.sparkSession, table, batch, keys)
-            else:
-                rewrite_from_mirror(batch)
         refresh_owner_tables(owner, table)
 
     writer = (

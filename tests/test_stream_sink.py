@@ -2,8 +2,8 @@
 file stream: the target equals the batch aggregate after every drain, each
 micro-batch stays within its Spark-job budget, an empty batch writes
 nothing, a partitioned target keeps its spec, a restart on the same
-checkpoint is exactly-once, and the sink's cached state does not grow with
-the number of batches."""
+checkpoint is exactly-once, a failed batch leaves the target intact, and
+the sink's cached state does not grow with the number of batches."""
 
 from __future__ import annotations
 
@@ -127,9 +127,49 @@ def test_merge_stream_drains_within_budget_and_restarts(spark, tmp_path, target)
     finally:
         query.stop()
     assert restarted == 1
-    # the mirror load is one more job, once per query
-    assert len(jobs) <= JOBS_PER_BATCH + 1, len(jobs)
+    # the mirror is read inside the batch's own checkpoint job
+    assert len(jobs) <= JOBS_PER_BATCH, len(jobs)
     assert _rows(spark.table(target)) == expected()
+
+
+def test_failed_batch_leaves_target_intact(spark, tmp_path, target, monkeypatch):
+    """A batch whose upsert fails while it is computed fails the query
+    before the overwrite drops the table, so the target keeps the previous
+    batch's rows and a restart on the same checkpoint reloads them and
+    ends exactly-once."""
+    from metadata_driven_etl_spark.operators import merge as merge_ops
+
+    src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    real_upsert = merge_ops.upsert
+
+    def failing_upsert(rows, source, keys):
+        out = real_upsert(rows, source, keys)
+        boom = F.raise_error(F.lit("injected upsert failure"))
+        return out.withColumn("total", F.when(F.col("n") > 0, boom).otherwise(F.col("total")))
+
+    _drop(spark, src, _wave(0))
+    query = _start(spark, src, target, ckpt)
+    try:
+        query.processAllAvailable()
+        first = _rows(spark.table(target))
+        monkeypatch.setattr(merge_ops, "upsert", failing_upsert)
+        _drop(spark, src, _wave(1))
+        with pytest.raises(StreamingQueryException, match="injected upsert failure"):
+            query.processAllAvailable()
+    finally:
+        query.stop()
+    spark.catalog.refreshTable(target)
+    assert _rows(spark.table(target)) == first
+
+    monkeypatch.setattr(merge_ops, "upsert", real_upsert)
+    query = _start(spark, src, target, ckpt)
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert _rows(spark.table(target)) == _rows(
+        _aggregate(spark.read.schema(SCHEMA).parquet(src))
+    )
 
 
 def test_merge_stream_keeps_partition_spec(spark, tmp_path, target):
