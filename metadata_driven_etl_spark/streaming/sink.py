@@ -17,7 +17,7 @@ is an ``io.writer.MirroredTable``: the query keeps the target's rows as a
 local checkpoint, read from the table once, upserts each batch into it,
 checkpoints the result before the overwrite (so a failed batch leaves the
 table intact) and overwrites the table from it, keeping its partition
-spec. No table file is read per batch: four Spark jobs (key check,
+spec. No table file is read per batch: at most four Spark jobs (key check,
 broadcast of the batch keys, checkpoint, write) and one file per batch on
 an unpartitioned target. The copy is the whole target and each batch
 rewrites all of it, so time and memory grow with the target's size: the
