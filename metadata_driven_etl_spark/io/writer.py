@@ -10,7 +10,11 @@ tables end up unpartitioned despite config (SURVEY.md §2.14#3). This seam
   ``ParquetFormat`` otherwise (this harness has no Delta), selected by
   ``get_table_format``,
 - gives MERGE/upsert one implementation point (Delta's native MERGE vs the
-  relational emulation in operators.merge).
+  relational emulation in operators.merge),
+- owns the one path that overwrites a table its own plan reads
+  (``_checkpointed_overwrite``): ``TableFormat.rewrite`` for a computed
+  table, ``MirroredTable`` for every parquet merge, batch or stream.
+  Callers never checkpoint before an overwrite themselves.
 
 Scale notes: ``overwrite_partitions`` uses dynamic partition overwrite —
 an incremental run only rewrites the partitions it produced, never the
@@ -19,9 +23,10 @@ table history (fixes the reference's silent history loss, §2.14#7).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -332,6 +337,26 @@ class TableFormat:
         )
         self.overwrite(out.drop("__z"), table, partition_by)
 
+    def rewrite(
+        self, df: DataFrame, table: str, partition_by: Sequence[str] | None = None
+    ) -> int:
+        """Overwrite ``table`` with ``df`` and return its row count, also
+        when ``df`` reads ``table`` (a maintained aggregate, an SCD2
+        dimension): see :func:`_checkpointed_overwrite`. The count comes
+        from an ``Observation`` on the checkpoint job, so it adds no job,
+        and the checkpoint is released once the write is done. Without
+        ``partition_by`` an existing table keeps its partition spec. The
+        session's cached file listing is refreshed, as after :meth:`merge`."""
+        spark = df.sparkSession
+        if partition_by is None and self.table_exists(spark, table):
+            partition_by = partition_columns(spark, table) or None
+        obs = Observation()
+        counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        _, release = _checkpointed_overwrite(self, counted, table, partition_by)
+        release()
+        spark.catalog.refreshTable(table)
+        return int(obs.get["rows"])
+
     def merge(
         self, spark: SparkSession, table: str, source: DataFrame, keys: Sequence[str]
     ) -> int:
@@ -339,28 +364,14 @@ class TableFormat:
         (WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT ALL) and return
         the source row count. Raises DuplicateSourceKeysError on a
         non-unique source — same contract as Delta's native MERGE. An
-        empty source leaves an existing table untouched."""
-        from metadata_driven_etl_spark.operators.merge import (
-            upsert,
-            validate_unique_keys,
-        )
-
-        rows = validate_unique_keys(source, keys)
-        if not self.table_exists(spark, table):
-            self.overwrite(source, table)
-            return rows
-        if not rows:
-            return 0
-        target = self.read(spark, table)
-        # Materialize before overwriting the files we read from.
-        merged = upsert(target, source, keys).localCheckpoint(eager=True)
-        # Re-apply the table's existing partition spec: the rewrite path
-        # would otherwise silently flatten a partitioned gold table on its
-        # first incremental merge.
-        self.overwrite(merged, table, partition_columns(spark, table) or None)
-        # The rewrite replaced every data file; a reader that resolved the
-        # table before this merge would otherwise hit the cached file
-        # listing and FAILED_READ_FILE on the vanished parts.
+        empty source writes nothing. One :meth:`MirroredTable.merge`,
+        whose copy is released afterwards."""
+        mirror = MirroredTable(self, table, keys)
+        rows = mirror.merge(source)
+        mirror.release()
+        # The rewrite replaced every data file; a reader that resolves the
+        # table through this session's cached file listing would otherwise
+        # hit FAILED_READ_FILE on the vanished parts.
         spark.catalog.refreshTable(table)
         return rows
 
@@ -378,18 +389,18 @@ class TableFormat:
 class MirroredTable:
     """A single writer's copy of a keyed managed table, kept as a local
     checkpoint so each upsert rewrites the table from it without reading
-    the table's files.
+    the table's files. :meth:`TableFormat.merge` is one merge through a
+    copy that is then released; a streaming sink keeps its copy across
+    batches.
 
     The rows are read from the table once, lazily, on the first merge that
     has a source row (nothing when the table does not exist; the first
     write creates it), together with its partition spec. Each merge
     computes ``upsert(rows, source)`` at the rows' partition count, so the
-    files per write do not grow, and checkpoints it EAGERLY before the
-    overwrite: ``saveAsTable`` drops the table before its write job runs,
-    so any failure while computing the upsert (a task error, or lost
-    checkpoint blocks) fails the merge with the table still intact. The
-    rows move to the new checkpoint only once the overwrite has returned,
-    and the old checkpoint's blocks are then released.
+    files per write do not grow, and writes it through
+    :func:`_checkpointed_overwrite`, so a failed merge leaves the table
+    intact. The rows move to the new checkpoint once the overwrite has
+    returned, and the old checkpoint's blocks are then released.
 
     Only the writer's own merges are in the copy: a write to the table
     from anywhere else is overwritten by the next merge.
@@ -400,8 +411,9 @@ class MirroredTable:
     vCPUs (local mode), with 50-key sources, one run each: 50 / 100k /
     1M-row tables took 1.24 / 1.01 / 1.66 s per merge at a peak RSS of
     1481 / 1549 / 1985 MB, against 1.41 / 1.39 / 2.18 s and 1404 / 1534 /
-    2256 MB for :meth:`TableFormat.merge`. Larger tables are unmeasured;
-    they belong on a format with a file-pruned MERGE (Delta)."""
+    2256 MB for a merge that re-read the table each time. Larger tables
+    are unmeasured; they belong on a format with a file-pruned MERGE
+    (Delta)."""
 
     def __init__(
         self, table_format: TableFormat, table: str, keys: Sequence[str]
@@ -418,33 +430,40 @@ class MirroredTable:
     def merge(self, source: DataFrame) -> int:
         """Upsert ``source`` (unique per key, else DuplicateSourceKeysError)
         into the table and return its row count; an empty source writes
-        nothing."""
+        nothing. ``source`` is persisted for the call: the key check, which
+        also counts it, and the upsert both read it."""
         from metadata_driven_etl_spark.operators.merge import (
             upsert,
             validate_unique_keys,
         )
 
-        rows = validate_unique_keys(source, self.keys)
-        if not rows:
-            return 0
-        if not self._loaded:
-            self._load(source.sparkSession)
-        if self._rows is None:
-            merged = source
-            self._num_files = max(source.rdd.getNumPartitions(), 1)
-        else:
-            merged = upsert(self._rows, source, self.keys).coalesce(self._num_files)
-        merged, release = _local_checkpoint(merged)
-        try:
-            self.table_format.overwrite(merged, self.table, self._partition_by)
-        except Exception:
-            release()
-            raise
-        self._release()
-        self._rows, self._release = merged, release
+        with persisted(source):
+            rows = validate_unique_keys(source, self.keys)
+            if not rows:
+                return 0
+            if not self._loaded:
+                self._load(source.sparkSession)
+            if self._rows is None:
+                merged = source
+                self._num_files = max(source.rdd.getNumPartitions(), 1)
+            else:
+                merged = upsert(self._rows, source, self.keys).coalesce(
+                    self._num_files
+                )
+            merged, release = _checkpointed_overwrite(
+                self.table_format, merged, self.table, self._partition_by
+            )
+        self.release()
+        self._loaded, self._rows, self._release = True, merged, release
         return rows
 
+    def release(self) -> None:
+        """Drop the copy's blocks; the next merge reads the table again."""
+        self._release()
+        self._loaded, self._release = False, lambda: None
+
     def _load(self, spark: SparkSession) -> None:
+        self._rows, self._partition_by = None, None
         if self.table_format.table_exists(spark, self.table):
             # a plain read: the first merge's checkpoint reads the files
             # once, before its overwrite replaces them
@@ -454,14 +473,44 @@ class MirroredTable:
         self._loaded = True
 
 
-def _local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
-    """``df.localCheckpoint(eager=True)`` and a function that drops its
-    blocks. ``DataFrame.unpersist`` does not reach them: they belong to the
-    checkpointed RDD, which the new frame's plan (a ``LogicalRDD``) holds,
-    so the handle is taken here, where the frame is made."""
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache ``df`` for the length of the block, so every action after the
+    first reads the cache instead of running its (possibly stateful) plan
+    again — the foreachBatch docs' advice for a micro-batch."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _checkpointed_overwrite(
+    table_format: TableFormat,
+    df: DataFrame,
+    table: str,
+    partition_by: Sequence[str] | None,
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Overwrite ``table`` from an eager local checkpoint of ``df``, and
+    return the checkpoint with a function that drops its blocks.
+
+    The engine's one way to overwrite a table that its own plan may read.
+    ``saveAsTable`` drops the table before its write job runs, so ``df``
+    is computed in full first: a failure while computing it (a task
+    error, lost blocks) fails here with the table intact. A failed
+    overwrite releases the checkpoint and re-raises. ``DataFrame.unpersist``
+    does not reach the blocks: they belong to the checkpointed RDD, which
+    the checkpoint's plan (a ``LogicalRDD``) holds, so the handle is taken
+    where it is made."""
     checkpoint = df.localCheckpoint(eager=True)
     rdd = checkpoint._jdf.queryExecution().logical().rdd()
-    return checkpoint, lambda: rdd.unpersist(False)
+    release = lambda: rdd.unpersist(False)  # noqa: E731
+    try:
+        table_format.overwrite(checkpoint, table, partition_by)
+    except Exception:
+        release()
+        raise
+    return checkpoint, release
 
 
 class ParquetFormat(TableFormat):
@@ -487,21 +536,22 @@ class DeltaFormat(TableFormat):
 
         # Delta raises only when duplicates MATCH a target row; unmatched
         # duplicates would insert twice — enforce the uniform contract.
-        rows = validate_unique_keys(source, keys)
-        if not self.table_exists(spark, table):
-            self.overwrite(source, table)
-            return rows
-        if not rows:
-            return 0
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-        (
-            DeltaTable.forName(spark, table)
-            .alias("t")
-            .merge(source.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
+        with persisted(source):
+            rows = validate_unique_keys(source, keys)
+            if not rows:
+                return 0
+            if not self.table_exists(spark, table):
+                self.overwrite(source, table)
+                return rows
+            cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
+            (
+                DeltaTable.forName(spark, table)
+                .alias("t")
+                .merge(source.alias("s"), cond)
+                .whenMatchedUpdateAll()
+                .whenNotMatchedInsertAll()
+                .execute()
+            )
         return rows
 
     def stream_merger(

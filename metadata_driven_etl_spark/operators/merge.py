@@ -7,8 +7,9 @@ semantics through a seam:
 
 - ``upsert(target, source, keys)`` — the pure relational form
   (source ∪ (target ▷ source)), used for computation and for the oracle.
-- ``merge_into_table`` — table-level merge through the TableFormat seam
-  (parquet: read-modify-overwrite; delta, when present: DeltaTable.merge).
+- the table-level merge is ``TableFormat.merge`` (io.writer): on parquet
+  it upserts into a checkpointed copy of the table and overwrites the
+  table from it; with Delta it is ``DeltaTable.merge``.
 
 Scale note: the relational form is one left-anti join (broadcastable when
 the incremental source is small — the common case) + a union; with Delta
@@ -57,28 +58,10 @@ def upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFra
     source row; unmatched source rows are inserted. Column sets must match
     (``UPDATE SET *`` semantics). ``source`` must be unique per key; this
     pure form stays lazy, so uniqueness is enforced at the table-merge
-    level (:func:`validate_unique_keys`, called by TableFormat.merge and
-    :func:`merge_into_table`).
+    level (:func:`validate_unique_keys`, called by TableFormat.merge).
     """
     kept = target.join(F.broadcast(source.select(*keys).distinct()), on=list(keys), how="left_anti")
     return source.unionByName(kept)
-
-
-def merge_into_table(
-    spark,
-    table_format,
-    table: str,
-    source: DataFrame,
-    keys: Sequence[str],
-) -> None:
-    """Table-level merge through the TableFormat seam (io.writer)."""
-    validate_unique_keys(source, keys)
-    if not table_format.table_exists(spark, table):
-        table_format.overwrite(source, table)
-        return
-    target = table_format.read(spark, table)
-    merged = upsert(target, source, keys)
-    table_format.overwrite(merged, table)
 
 
 def scd2_apply(

@@ -101,6 +101,14 @@ class _LayerBase:
             except Exception:
                 pass  # static confs can't change at runtime; defaults apply
 
+    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
+        """Execute config SQL with the date bound as a Spark SQL named
+        parameter (never string-spliced)."""
+        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
+            "${PROCESSING_DATE}", ":processing_date"
+        )
+        return self.ctx.spark.sql(q, args={"processing_date": run_date})
+
     def _run_unit(self, unit, runner) -> UnitResult:
         uid = getattr(unit, "source_id", None) or getattr(
             unit, "transform_id", None
@@ -277,14 +285,6 @@ class SilverLayer(_LayerBase):
             self.config.transformations, lambda t: self._transform(t, run_date)
         )
 
-    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
-        """Execute config SQL with the date bound as a Spark SQL named
-        parameter (never string-spliced)."""
-        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
-            "${PROCESSING_DATE}", ":processing_date"
-        )
-        return self.ctx.spark.sql(q, args={"processing_date": run_date})
-
     def _enrich(self, df: DataFrame, t: SilverTransform) -> DataFrame:
         """Apply declared enrichments in order (VERDICT r6 item 5: the
         as-of lookup was API-only; the engine's idiom is YAML). Runs
@@ -349,12 +349,6 @@ class GoldLayer(_LayerBase):
         return self._run_units(
             self.config.models, lambda m: self._model(m, run_date)
         )
-
-    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
-        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
-            "${PROCESSING_DATE}", ":processing_date"
-        )
-        return self.ctx.spark.sql(q, args={"processing_date": run_date})
 
     def _event_frame(self, m: GoldModel) -> DataFrame:
         """``model_type: event`` — dispatch the declared clickstream
@@ -519,9 +513,7 @@ class GoldLayer(_LayerBase):
         if m.refresh_type == "incremental" and fmt.table_exists(
             spark, m.target_table
         ):
-            # MERGE path: run the model once; the key check (which also
-            # counts) and the upsert both read the checkpoint
-            df = df.localCheckpoint(eager=True)
+            # the merge persists its source, so the model runs once
             rows = fmt.merge(spark, m.target_table, df, list(m.primary_keys))
         else:
             rows = _counted_write(
@@ -576,15 +568,8 @@ class GoldLayer(_LayerBase):
                 F.lit(None).cast("date").alias("valid_to"),
             )
             mode = "scd2_first_full"
-        # the maintained path reads the target it overwrites: sever
-        # lineage first (the TableFormat.merge discipline)
-        df = df.localCheckpoint(eager=True)
-        rows = _counted_write(
-            df,
-            lambda d: fmt.overwrite(
-                d, m.target_table, list(m.partition_by) or None
-            ),
-        )
+        # the maintained path reads the target it overwrites
+        rows = fmt.rewrite(df, m.target_table, list(m.partition_by) or None)
         self.ctx.control.update_run(
             m.target_table, self.layer_name, run_date, rows, "success",
             {
@@ -672,21 +657,13 @@ class GoldLayer(_LayerBase):
                     for alias, src in sum_cols.items()
                 ],
             )
-        # The maintained path reads the target it is about to overwrite:
-        # sever lineage first (same discipline as TableFormat.merge).
         # Stamp the lineage column BEFORE the write so the dictionary
         # registers the frame that is actually written (the full-refresh
         # path registers WITH the timestamp; registering the pre-stamp
         # frame here would drop a real column from the schema record).
-        df = df.localCheckpoint(eager=True).withColumn(
-            "gold_insert_timestamp", F.current_timestamp()
-        )
-        rows = _counted_write(
-            df,
-            lambda d: fmt.overwrite(
-                d, m.target_table, list(m.partition_by) or None
-            ),
-        )
+        # The maintained path reads the target it overwrites.
+        df = df.withColumn("gold_insert_timestamp", F.current_timestamp())
+        rows = fmt.rewrite(df, m.target_table, list(m.partition_by) or None)
         # Remember this snapshot for the next run's diff AFTER the target
         # write succeeded (a failed target write must not advance the
         # maintained-snapshot state, or the next diff would skip changes).

@@ -9,9 +9,10 @@ as a delete of the old image plus an insert of the new one (the standard
 before/after decomposition CDC feeds emit). Each micro-batch maps op →
 ±1 weight and applies the signed per-group delta to the persisted
 aggregate via the shared :func:`operators.merge.apply_signed_delta`
-core, then overwrites the (small — it is aggregate state, not the
-corpus) table. Per-batch cost scales with the CHANGE rate; the corpus is
-never touched.
+core, then rewrites the (small — it is aggregate state, not the corpus)
+table through ``TableFormat.rewrite``, which checkpoints the new state
+before the overwrite and keeps a pre-created table's partition spec.
+Per-batch cost scales with the CHANGE rate; the corpus is never touched.
 
 Exactly-once notes: the overwrite is not idempotent against replay (a
 re-applied batch would double-count), so every written row carries the
@@ -34,12 +35,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.io.writer import TableFormat, persisted
 from metadata_driven_etl_spark.operators.merge import apply_signed_delta
-from metadata_driven_etl_spark.streaming.sink import (
-    persisted,
-    refresh_owner_tables,
-)
+from metadata_driven_etl_spark.streaming.sink import refresh_owner_tables
 
 _OPS = ("insert", "delete")
 
@@ -66,7 +64,7 @@ def agg_maintenance_stream(
     Returns the StreamingQuery (caller awaits/stops). ``agg_table`` is
     created by the first batch; pre-seed it by writing the batch
     aggregate with a ``_batch_id`` column of NULLs (null-safe guards keep
-    seed rows live).
+    seed rows live), partitioned or not: every batch keeps its spec.
     """
     gks = list(group_keys)
     for alias, src in sum_cols.items():
@@ -143,11 +141,10 @@ def agg_maintenance_stream(
             base, signed, group_keys=gks, sum_cols=sum_cols,
             count_col=count_col,
         ).withColumn("_batch_id", F.lit(batch_id))
-        # materialize BEFORE the overwrite: the plan reads the same table
-        # it is about to replace (read-overwrite hazard), and the state is
-        # aggregate-sized, not corpus-sized
-        updated = updated.localCheckpoint(eager=True)
-        table_format.overwrite(updated, agg_table)
+        # the plan reads the table it replaces: rewrite checkpoints it
+        # first (the state is aggregate-sized, not corpus-sized) and keeps
+        # the table's partition spec
+        table_format.rewrite(updated, agg_table)
         refresh_owner_tables(owner, agg_table)
 
     writer = (

@@ -38,15 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.io.writer import TableFormat, persisted
 from metadata_driven_etl_spark.operators.dedup import (
     incremental_dedup_survivors,
     lsh_bands,
 )
-from metadata_driven_etl_spark.streaming.sink import (
-    persisted,
-    refresh_owner_tables,
-)
+from metadata_driven_etl_spark.streaming.sink import refresh_owner_tables
 
 
 def dedup_stream(

@@ -5,25 +5,26 @@ The canonical streaming-medallion ingest pattern: a streaming aggregation
 so the table always holds the latest value per key — the streaming
 counterpart of the gold layer's incremental refresh (plans/pipeline.py).
 
-Cost per micro-batch: the batch is persisted, and the merge's first
-action is the key check (``operators.merge.validate_unique_keys``), which
-runs the stateful plan once, fills the cache and returns the row count. An
-empty batch stops there and writes nothing; a batch with a duplicate key
-raises ``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The
-rest reads the cache.
+The merge is ``table_format.stream_merger``, and each call persists its
+batch for its own length: its first action is the key check
+(``operators.merge.validate_unique_keys``), which runs the stateful plan
+once, fills the cache and returns the row count. An empty batch stops
+there and writes nothing; a batch with a duplicate key raises
+``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The rest
+reads the cache.
 
-The merge is ``table_format.stream_merger``. On the parquet fallback that
-is an ``io.writer.MirroredTable``: the query keeps the target's rows as a
-local checkpoint, read from the table once, upserts each batch into it,
-checkpoints the result before the overwrite (so a failed batch leaves the
-table intact) and overwrites the table from it, keeping its partition
-spec. No table file is read per batch: at most four Spark jobs (key check,
-broadcast of the batch keys, checkpoint, write) and one file per batch on
-an unpartitioned target. The copy is the whole target and each batch
-rewrites all of it, so time and memory grow with the target's size: the
-streaming benchmark's target has about 50 rows, and ``MirroredTable``
-gives the figures measured up to 1M rows. Delta targets use Delta's
-file-pruned native MERGE on the persisted batch instead.
+On the parquet fallback the merger is an ``io.writer.MirroredTable``, the
+same code as a batch ``TableFormat.merge`` but with its copy kept: the
+query keeps the target's rows as a local checkpoint, read from the table
+once, upserts each batch into it and overwrites the table through
+``io.writer``'s one checkpointed rewrite (so a failed batch leaves the
+table intact), keeping its partition spec. No table file is read per
+batch: at most four Spark jobs (key check, broadcast of the batch keys,
+checkpoint, write) and one file per batch on an unpartitioned target.
+The copy is the whole target and each batch rewrites all of it, so time
+and memory grow with the target's size: the streaming benchmark's target
+has about 50 rows, and ``MirroredTable`` gives the figures measured up
+to 1M rows. Delta targets use Delta's file-pruned native MERGE instead.
 
 Single-writer contract: while the query runs it owns its target. A
 write from anywhere else is not in the mirror and is overwritten by the
@@ -35,8 +36,7 @@ idempotent for deterministic aggregates).
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from contextlib import contextmanager
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -60,18 +60,6 @@ def refresh_owner_tables(owner, *tables: str) -> None:
             pass
 
 
-@contextmanager
-def persisted(batch_df: DataFrame) -> Iterator[DataFrame]:
-    """Cache a micro-batch for the length of the block, so every action
-    after the first reads the cache instead of running the batch's
-    (possibly stateful) plan again — the foreachBatch docs' advice."""
-    batch_df.persist()
-    try:
-        yield batch_df
-    finally:
-        batch_df.unpersist()
-
-
 def merge_stream(
     stream_df: DataFrame,
     table: str,
@@ -92,10 +80,8 @@ def merge_stream(
     merge_batch = table_format.stream_merger(table, keys)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with persisted(batch_df) as batch:
-            if not merge_batch(batch):
-                return
-        refresh_owner_tables(owner, table)
+        if merge_batch(batch_df):
+            refresh_owner_tables(owner, table)
 
     writer = (
         stream_df.writeStream.foreachBatch(upsert_batch)

@@ -828,6 +828,51 @@ def test_streaming_agg_maintenance_replay_guard_and_bad_op(
     spark.sql("DROP DATABASE IF EXISTS stream_ivm")
 
 
+def test_streaming_agg_maintenance_keeps_partition_spec(spark, tmp_path):
+    """A pre-created aggregate table partitioned on ``p`` keeps that spec
+    across a batch (the sink's rewrite used to flatten it), and holds the
+    seed plus the batch's signed delta."""
+    from metadata_driven_etl_spark.io.writer import (
+        ParquetFormat,
+        partition_columns,
+    )
+    from metadata_driven_etl_spark.streaming.agg_maintenance_sink import (
+        agg_maintenance_stream,
+    )
+
+    agg_t = "stream_ivm.part_agg"
+    spark.sql(f"DROP TABLE IF EXISTS {agg_t}")
+    spark.sql("CREATE DATABASE IF NOT EXISTS stream_ivm")
+    fmt = ParquetFormat()
+    seed = spark.createDataFrame(
+        [("x", 1, 2, 10, None), ("y", 1, 1, 5, None)],
+        "p string, g long, n_rows long, total long, _batch_id long",
+    )
+    fmt.overwrite(seed, agg_t, ["p"])
+    src = str(tmp_path / "cdc")
+    spark.createDataFrame(
+        [("x", 1, 3, "insert"), ("y", 2, 7, "insert"), ("y", 1, 5, "delete")],
+        "p string, g long, amt long, op string",
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(
+        "p string, g long, amt long, op string"
+    ).parquet(src)
+    q = agg_maintenance_stream(
+        stream, agg_t, fmt, str(tmp_path / "ckpt"),
+        group_keys=["p", "g"], sum_cols={"total": "amt"},
+    )
+    q.awaitTermination(120)
+
+    assert partition_columns(spark, agg_t) == ["p"]
+    got = {
+        tuple(r)
+        for r in spark.table(agg_t).select("p", "g", "n_rows", "total").collect()
+    }
+    assert got == {("x", 1, 3, 13), ("y", 2, 1, 7)}
+    spark.sql(f"DROP TABLE IF EXISTS {agg_t}")
+    spark.sql("DROP DATABASE IF EXISTS stream_ivm")
+
+
 def test_ohlc_stream_equals_batch(spark, events_dir):
     """Streaming OHLC bars (min_by/max_by over tumbling windows) must
     equal the batch evaluation of the same expression — extremum

@@ -1,5 +1,6 @@
 """TableFormat write-path semantics: dynamic partition overwrite column
-alignment, merge partition preservation, backfill-safe behaviors."""
+alignment, merge and rewrite partition preservation, released checkpoint
+blocks, the batch merge's job budget, backfill-safe behaviors."""
 
 from __future__ import annotations
 
@@ -99,6 +100,89 @@ def test_merge_rejects_duplicate_source_keys(spark, fmt):
     dup_src = spark.createDataFrame([Row(id=1, v="a"), Row(id=1, v="b")])
     with pytest.raises(DuplicateSourceKeysError, match=r"2 rows for key \{'id': 1\}"):
         fmt.merge(spark, tbl, dup_src, keys=["id"])
+
+
+def _lazy_agg(spark, i):
+    """A lazily built aggregate source, unique on ``id`` (0..9): ten
+    groups of four rows whose ``v`` grows with ``i``."""
+    return (
+        spark.range(0, 40)
+        .select((F.col("id") % 10).alias("id"), (F.col("id") + i).alias("v"))
+        .groupBy("id")
+        .agg(F.sum("v").alias("v"))
+    )
+
+
+def test_one_shot_merges_and_rewrites_release_their_blocks(spark, fmt):
+    """A batch merge and a rewrite each checkpoint the table's new rows
+    before the overwrite; once the call returns those blocks are
+    released, so repeated calls leave the persistent-RDD count where it
+    started (it grew by 8 over six gold-style merges when each merge
+    left its checkpoints behind)."""
+    tbl = "default.wp_merge_blocks"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    fmt.overwrite(_lazy_agg(spark, 0), tbl)
+    persistent = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: E731
+    before = persistent()
+    for i in range(1, 7):
+        assert fmt.merge(spark, tbl, _lazy_agg(spark, i), keys=["id"]) == 10
+    for _ in range(3):
+        bumped = spark.table(tbl).withColumn("v", F.col("v") + 1)
+        assert fmt.rewrite(bumped, tbl) == 10
+    assert persistent() == before
+    want = _lazy_agg(spark, 6).withColumn("v", F.col("v") + 3)
+    assert {tuple(r) for r in spark.table(tbl).collect()} == {
+        tuple(r) for r in want.collect()
+    }
+
+
+def test_rewrite_keeps_partition_spec_and_counts(spark, fmt):
+    """``rewrite`` of a plan that reads its own table keeps the table's
+    partition spec unless one is given, and returns the rows written."""
+    tbl = "default.wp_rewrite_part"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    base = spark.createDataFrame(
+        [Row(region="eu", id=1, amt=10), Row(region="us", id=2, amt=20)]
+    )
+    fmt.overwrite(base, tbl, ["region"])
+    doubled = spark.table(tbl).withColumn("amt", F.col("amt") * 2)
+    assert fmt.rewrite(doubled, tbl) == 2
+    assert partition_columns(spark, tbl) == ["region"]
+    assert {(r.id, r.amt) for r in spark.table(tbl).collect()} == {(1, 20), (2, 40)}
+    assert fmt.rewrite(spark.table(tbl).where("id = 1"), tbl, ["id"]) == 1
+    assert partition_columns(spark, tbl) == ["id"]
+
+
+# Measured: the key check runs as 4 adaptive-execution jobs and fills the
+# source's cache; then one job each for the broadcast of the source keys,
+# the checkpoint of the upsert and the write.
+MERGE_JOBS = 7
+
+
+def test_merge_of_a_lazy_aggregate_stays_within_its_job_budget(spark, fmt):
+    """The merge persists its source, so a lazily built aggregate runs
+    once for the key check and the upsert together, and the result is
+    ``upsert`` of the two frames."""
+    from metadata_driven_etl_spark.operators.merge import upsert
+
+    tbl = "default.wp_merge_jobs"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    target = spark.createDataFrame(
+        [(k, -k) for k in range(5, 15)], "id long, v long"
+    )
+    fmt.overwrite(target, tbl)
+    source = _lazy_agg(spark, 1)
+    want = {tuple(r) for r in upsert(target, source, ["id"]).collect()}
+    sc = spark.sparkContext
+    group = "wp_merge_jobs"
+    sc.setJobGroup(group, "one batch merge")
+    try:
+        assert fmt.merge(spark, tbl, source, keys=["id"]) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= MERGE_JOBS, len(jobs)
+    assert {tuple(r) for r in spark.table(tbl).collect()} == want
 
 
 # --- range-clustered layout (file-skipping) ---------------------------------
