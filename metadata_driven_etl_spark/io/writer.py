@@ -23,6 +23,7 @@ table history (fixes the reference's silent history loss, §2.14#7).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 
@@ -254,13 +255,23 @@ class TableFormat:
         # partition columns last in the table schema — align by name first
         # or any df whose partition column isn't trailing writes misaligned
         # columns (silent corruption or cast errors).
-        df = df.select(*spark.table(table).columns)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.format(self.format_name).mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._insert_dynamic(df.select(*spark.table(table).columns), table)
+
+    def _insert_dynamic(self, df: DataFrame, table: str) -> None:
+        """Dynamic partition overwrite of an existing table, as a storage
+        property of the table (``partitionOverwriteMode=dynamic``, set by
+        ``ALTER TABLE``, a catalog command that runs no Spark job). The
+        property wins over the session's
+        ``spark.sql.sources.partitionOverwriteMode``, so the write neither
+        reads nor flips that shared conf, which another thread may change
+        meanwhile; the same option on the ``insertInto`` writer would be
+        ignored. The table keeps the property, so a later ``INSERT
+        OVERWRITE`` into it is dynamic too."""
+        df.sparkSession.sql(
+            f"ALTER TABLE {table} "
+            "SET SERDEPROPERTIES ('partitionOverwriteMode'='dynamic')"
+        )
+        df.write.format(self.format_name).mode("overwrite").insertInto(table)
 
     def overwrite_bucketed(
         self,
@@ -485,6 +496,38 @@ def persisted(df: DataFrame) -> Iterator[DataFrame]:
         df.unpersist()
 
 
+def released_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+    """An eager local checkpoint of ``df`` and a function that drops its
+    blocks. ``DataFrame.unpersist`` does not reach the blocks: they belong
+    to the checkpointed RDD, which the checkpoint's plan (a
+    ``LogicalRDD``) holds, so the handle is taken where it is made."""
+    checkpoint = df.localCheckpoint(eager=True)
+    rdd = checkpoint._jdf.queryExecution().logical().rdd()
+    return checkpoint, lambda: rdd.unpersist(False)
+
+
+def checkpoints_read_by(df: DataFrame) -> Callable[[], None]:
+    """A function that drops the blocks of every local checkpoint ``df``'s
+    plan reads (its locally checkpointed ``LogicalRDD`` leaves), such as
+    one an operator made inside itself. Call it once nothing reads those
+    checkpoints any more, e.g. after a checkpoint of ``df`` itself."""
+    rdds, stack = [], [df._jdf.queryExecution().logical()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "LogicalRDD":
+            rdd = node.rdd()
+            if rdd.isLocallyCheckpointed():
+                rdds.append(rdd)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+    def release() -> None:
+        for rdd in rdds:
+            rdd.unpersist(False)
+
+    return release
+
+
 def _checkpointed_overwrite(
     table_format: TableFormat,
     df: DataFrame,
@@ -498,13 +541,8 @@ def _checkpointed_overwrite(
     ``saveAsTable`` drops the table before its write job runs, so ``df``
     is computed in full first: a failure while computing it (a task
     error, lost blocks) fails here with the table intact. A failed
-    overwrite releases the checkpoint and re-raises. ``DataFrame.unpersist``
-    does not reach the blocks: they belong to the checkpointed RDD, which
-    the checkpoint's plan (a ``LogicalRDD``) holds, so the handle is taken
-    where it is made."""
-    checkpoint = df.localCheckpoint(eager=True)
-    rdd = checkpoint._jdf.queryExecution().logical().rdd()
-    release = lambda: rdd.unpersist(False)  # noqa: E731
+    overwrite releases the checkpoint and re-raises."""
+    checkpoint, release = released_checkpoint(df)
     try:
         table_format.overwrite(checkpoint, table, partition_by)
     except Exception:
@@ -519,11 +557,31 @@ class ParquetFormat(TableFormat):
     format_name = "parquet"
 
 
+_SESSION_CONF_LOCK = threading.Lock()
+
+
 class DeltaFormat(TableFormat):
     """Delta-backed tables; native MERGE. Only constructible when
     delta-spark is importable."""
 
     format_name = "delta"
+
+    def _insert_dynamic(self, df: DataFrame, table: str) -> None:
+        """Dynamic overwrite through the session conf, switched for the
+        write and restored after it; the lock keeps concurrent engine
+        writes from restoring it under one another. Unverified (no
+        delta-spark here), and so is whether Delta would honour the table
+        property the base class sets instead."""
+        spark, key = df.sparkSession, "spark.sql.sources.partitionOverwriteMode"
+        with _SESSION_CONF_LOCK:
+            prev = spark.conf.get(key, "static")
+            spark.conf.set(key, "dynamic")
+            try:
+                df.write.format(self.format_name).mode("overwrite").insertInto(
+                    table
+                )
+            finally:
+                spark.conf.set(key, prev)
 
     def merge(
         self, spark: SparkSession, table: str, source: DataFrame, keys: Sequence[str]

@@ -15,8 +15,8 @@ Single-writer contract: one ``PipelineContext`` owns the metadata tables
 for one run (``run_pipeline`` builds one per run), so its mirrors are the
 tables; a store constructed later loads what earlier stores committed.
 Two live stores over one keyed table would overwrite each other's
-commits. Locks are per instance: they serialize the units of one run
-that log from concurrent threads (``max_parallel_units``).
+commits. Locks are per instance: they serialize the units of one run,
+which log from concurrent threads (``_LayerBase._run_units``).
 """
 
 from __future__ import annotations

@@ -14,6 +14,7 @@ values — the cost difference is irrelevant next to the shuffle.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -128,6 +129,10 @@ DEFAULT_MAX_BUCKET_SIZE = 32
 # the shuffling one. Measured (SCALE.md round-7): semantic_dedup sf0.1
 # 10.5s → ~4s, pagerank_copurchase 3.1s → ~1.4s, identical oracle hashes.
 SMALL_GRAPH_EDGE_ROWS = 1 << 20
+# one small-graph scope at a time per process: two overlapping scopes
+# (corpus pipelines run as concurrent units) would each restore what the
+# other set, and could leave the session with adaptive execution off
+_REGIME_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -142,12 +147,13 @@ def _iteration_regime(
     deferring only execution), so every round planned inside this scope
     bakes the small partitioning in even though the jobs may run later;
     confs are restored on exit, so plans built after the loop (the
-    caller's consumers) keep the session posture."""
+    caller's consumers) keep the session posture. Scopes in different
+    threads take turns; other threads' plans built meanwhile see the
+    small regime too, which changes their partitioning, not their rows."""
     if n_edge_rows > SMALL_GRAPH_EDGE_ROWS:
         yield None
         return
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    old = {k: spark.conf.get(k) for k in keys}
     parts = max(
         2,
         min(
@@ -155,13 +161,15 @@ def _iteration_regime(
             n_edge_rows // 65536 + 1,
         ),
     )
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        yield parts
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    with _REGIME_LOCK:
+        old = {k: spark.conf.get(k) for k in keys}
+        try:
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            yield parts
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
 
 
 def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:

@@ -21,11 +21,16 @@ fixed per SURVEY.md §2.14:
 
 from __future__ import annotations
 
+import dataclasses
+import re
 import time
+from collections.abc import Iterator, Sequence
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from metadata_driven_etl_spark.config.model import (
     GoldModel,
@@ -34,7 +39,10 @@ from metadata_driven_etl_spark.config.model import (
     SourceConfig,
 )
 from metadata_driven_etl_spark.dq.engine import DataQualityEngine, DQRejectError
-from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.io.writer import (
+    TableFormat,
+    released_checkpoint,
+)
 from metadata_driven_etl_spark.metadata.audit import AuditLogger
 from metadata_driven_etl_spark.metadata.control import ControlTable
 from metadata_driven_etl_spark.metadata.metrics import DataDictionary, DQMetricsStore
@@ -89,6 +97,66 @@ def _counted_write(df: DataFrame, write_fn) -> int:
     return int(obs.get["rows"])
 
 
+def snapshot_copy(target_table: str) -> str:
+    """The table a ``refresh_type: delta`` model keeps its last maintained
+    snapshot in."""
+    return f"{target_table}__maintained_snapshot"
+
+
+def _config_strings(obj) -> Iterator[str]:
+    """Every string in a unit's config, nested sections included."""
+    if isinstance(obj, str):
+        yield obj
+    elif dataclasses.is_dataclass(obj):
+        for f in dataclasses.fields(obj):
+            yield from _config_strings(getattr(obj, f.name))
+    elif isinstance(obj, dict):
+        for k, v in obj.items():
+            yield from _config_strings(k)
+            yield from _config_strings(v)
+    elif isinstance(obj, (list, tuple)):
+        for v in obj:
+            yield from _config_strings(v)
+
+
+def _written_tables(unit) -> set[str]:
+    tables = {unit.target_table.lower()}
+    if getattr(unit, "refresh_type", None) == "delta":
+        tables.add(snapshot_copy(unit.target_table).lower())
+    return tables
+
+
+def unit_dependencies(units: Sequence) -> list[set[int]]:
+    """For each unit, the indices of the earlier units it must wait for.
+
+    Two units conflict when they write a same table, or when either
+    unit's config names a table the other writes, anywhere: SQL text,
+    ``source_table``, a DQ ``ref_table``, an enrichment ``right_table``,
+    ``event.source_table``, ``snapshot_table``, a corpus ``input_table``.
+    The match is conservative: the whole table name, case-insensitive,
+    backticks ignored, wherever it stands in any string of the config. A
+    false match only serializes two units."""
+    writes = [_written_tables(u) for u in units]
+    texts = [
+        "\n".join(_config_strings(u)).lower().replace("`", "") for u in units
+    ]
+
+    def names(text: str, tables: set[str]) -> bool:
+        return any(
+            re.search(rf"(?<!\w){re.escape(t)}(?!\w)", text) for t in tables
+        )
+
+    return [
+        {
+            i for i in range(j)
+            if writes[i] & writes[j]
+            or names(texts[j], writes[i])
+            or names(texts[i], writes[j])
+        }
+        for j in range(len(units))
+    ]
+
+
 class _LayerBase:
     layer_name = "?"
 
@@ -138,46 +206,57 @@ class _LayerBase:
             return UnitResult(uid, unit.target_table, "error", 0, secs, str(e))
 
     def _run_units(self, units, runner) -> list[UnitResult]:
-        """Run a layer's units; independent units can run CONCURRENTLY.
+        """Run a layer's units, independent ones concurrently, in
+        dependency order.
 
         The reference executes sources/transforms/models strictly
-        sequentially (SURVEY.md §3) — idle cluster while each unit's small
-        job runs. With ``default: max_parallel_units: N`` in config, units
-        are submitted from N threads: Spark's scheduler interleaves the
-        jobs across executors (thread-safe by design), per-unit isolation
-        and result order are preserved, and each metadata store serializes
-        its commits under its own lock (``metadata.store``). Units sharing
-        a target table (e.g. two bronze sources appending into one table)
-        stay sequential with each other — only cross-target parallelism is
-        exploited, so no data table ever sees concurrent writers.
+        sequentially (SURVEY.md §3), so the cluster idles while each
+        unit's handful of small jobs runs. Here a unit waits only for the
+        earlier units of its layer (config order) it conflicts with
+        (:func:`unit_dependencies`); every other unit starts as soon as
+        those have finished. Units run from a pool of at most
+        ``defaultParallelism`` threads, each started through
+        ``inheritable_thread_target``, so the caller's job group and local
+        properties reach the unit's jobs. Spark's scheduler interleaves
+        the jobs; each metadata store serializes its commits under its
+        own lock (``metadata.store``). A layer of one unit, or a context
+        of one core, runs in the calling thread.
 
-        The audit rows the units buffered are appended once, when the
-        layer ends, even when it ends by raising.
+        Results come back in config order, each unit's errors stay its
+        own, and the audit rows the units buffered are appended once, when
+        the layer ends, even when it ends by raising.
         """
         try:
-            return self._run_unit_groups(list(units), runner)
+            return self._schedule(list(units), runner)
         finally:
             self.ctx.audit.flush()
 
-    def _run_unit_groups(self, units: list, runner) -> list[UnitResult]:
-        workers = int(self.config.defaults.extra.get("max_parallel_units", 1))
-        if workers <= 1 or len(units) <= 1:
+    def _schedule(self, units: list, runner) -> list[UnitResult]:
+        spark = self.ctx.spark
+        width = min(len(units), spark.sparkContext.defaultParallelism)
+        if width <= 1:
             return [self._run_unit(u, runner) for u in units]
-        from concurrent.futures import ThreadPoolExecutor
-
-        groups: dict[str, list[int]] = {}
-        for i, u in enumerate(units):
-            groups.setdefault(u.target_table, []).append(i)
-
-        def run_group(idxs: list[int]) -> list[tuple[int, UnitResult]]:
-            return [(i, self._run_unit(units[i], runner)) for i in idxs]
-
+        waiting = dict(enumerate(unit_dependencies(units)))
         results: list[UnitResult | None] = [None] * len(units)
-        with ThreadPoolExecutor(max_workers=min(workers, len(groups))) as pool:
-            for pairs in pool.map(run_group, groups.values()):
-                for i, res in pairs:
-                    results[i] = res
-        return list(results)  # original config order
+        running: dict[Future, int] = {}
+        pool = ThreadPoolExecutor(max_workers=width)
+        try:
+            while waiting or running:
+                for i in [i for i, deps in waiting.items() if not deps]:
+                    del waiting[i]
+                    # wrapped here, in the caller's thread, so each unit
+                    # gets a copy of the caller's local properties
+                    run = inheritable_thread_target(spark)(self._run_unit)
+                    running[pool.submit(run, units[i], runner)] = i
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in done:
+                    i = running.pop(f)
+                    results[i] = f.result()
+                    for deps in waiting.values():
+                        deps.discard(i)
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+        return list(results)  # config order
 
 
 class BronzeLayer(_LayerBase):
@@ -278,7 +357,7 @@ class SilverLayer(_LayerBase):
 
     def __init__(self, ctx: PipelineContext, config: PipelineConfig):
         super().__init__(ctx, config)
-        self.dq = DataQualityEngine(ctx.spark, sample_invalid=100)
+        self.dq = DataQualityEngine(ctx.spark)
 
     def run(self, run_date: str) -> list[UnitResult]:
         return self._run_units(
@@ -607,16 +686,27 @@ class GoldLayer(_LayerBase):
         path ever touches, and bucketing removes half that shuffle every
         cadence (all of it when the upstream ``snapshot_table`` is
         bucketed on the same keys by its own writer)."""
-        fmt, spark = self.ctx.table_format, self.ctx.spark
-        snap_copy = f"{m.target_table}__maintained_snapshot"
-        gks = list(m.group_keys)
-        sum_cols = dict(m.sum_cols)
         # ONE consistent snapshot image for BOTH the diff and the
         # maintained-snapshot write: a lazy re-read of snapshot_table at
         # the copy write would persist whatever an upstream writer landed
         # in between — a snapshot that does NOT match the applied delta,
-        # silently skipping those rows' changes on every later run.
-        new = spark.table(m.snapshot_table).localCheckpoint(eager=True)
+        # silently skipping those rows' changes on every later run. Its
+        # blocks are dropped once both writes are done.
+        new, release = released_checkpoint(
+            self.ctx.spark.table(m.snapshot_table)
+        )
+        try:
+            return self._maintain_delta(m, run_date, new)
+        finally:
+            release()
+
+    def _maintain_delta(
+        self, m: GoldModel, run_date: str, new: DataFrame
+    ) -> int:
+        fmt, spark = self.ctx.table_format, self.ctx.spark
+        snap_copy = snapshot_copy(m.target_table)
+        gks = list(m.group_keys)
+        sum_cols = dict(m.sum_cols)
         # Crash-safety without a transactional store: the target write
         # and the snapshot advance are two non-atomic writes, and EITHER
         # stale half silently corrupts all later deltas (stale snapshot →

@@ -38,7 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.io.writer import TableFormat, persisted
+from metadata_driven_etl_spark.io.writer import (
+    TableFormat,
+    checkpoints_read_by,
+    persisted,
+    released_checkpoint,
+)
 from metadata_driven_etl_spark.operators.dedup import (
     incremental_dedup_survivors,
     lsh_bands,
@@ -135,26 +140,33 @@ def dedup_stream(
             shingle_n=shingle_n,
         )
         # materialize once: appended to BOTH tables below, and the second
-        # append must see the same survivor set the first one wrote
-        survivors = survivors.localCheckpoint(eager=True)
-        if survivors.isEmpty():
-            return
-        if not out_done:
-            out_rows = survivors
-            if out_stamped:
-                out_rows = out_rows.withColumn("_batch_id", F.lit(batch_id))
-            table_format.append(out_rows, output_table)
-        if not idx_done:
-            new_bands = lsh_bands(
-                survivors, text_col, id_col, num_hashes, band_size,
-                shingle_n,
-            )
-            if idx_stamped:
-                new_bands = new_bands.withColumn(
-                    "_batch_id", F.lit(batch_id)
+        # append must see the same survivor set the first one wrote. Its
+        # blocks, and those of the band checkpoint the screen made, are
+        # dropped once the batch is written.
+        release_inputs = checkpoints_read_by(survivors)
+        survivors, release = released_checkpoint(survivors)
+        release_inputs()
+        try:
+            if survivors.isEmpty():
+                return
+            if not out_done:
+                out_rows = survivors
+                if out_stamped:
+                    out_rows = out_rows.withColumn("_batch_id", F.lit(batch_id))
+                table_format.append(out_rows, output_table)
+            if not idx_done:
+                new_bands = lsh_bands(
+                    survivors, text_col, id_col, num_hashes, band_size,
+                    shingle_n,
                 )
-            table_format.append(new_bands, index_table)
-        refresh_owner_tables(owner, output_table, index_table)
+                if idx_stamped:
+                    new_bands = new_bands.withColumn(
+                        "_batch_id", F.lit(batch_id)
+                    )
+                table_format.append(new_bands, index_table)
+            refresh_owner_tables(owner, output_table, index_table)
+        finally:
+            release()
 
     writer = (
         stream_df.writeStream.foreachBatch(screen_batch)

@@ -30,6 +30,23 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture()
+def persistent_rdds(spark):
+    """``persistent_rdds()`` returns a counter of the RDDs created from
+    then on that are still persisted. A count over the whole context moves
+    on its own: checkpoints other tests left behind are released whenever
+    a JVM garbage collection lets Spark's ContextCleaner reach them."""
+    jsc = spark.sparkContext._jsc
+
+    def mark():
+        floor = jsc.sc().newRddId()
+        return lambda: sum(
+            1 for i in jsc.getPersistentRDDs().keySet() if i > floor
+        )
+
+    return mark
+
+
 # hypothesis-compatible alias (function-scoped health check suppressed)
 @pytest.fixture(scope="session")
 def spark_global(spark):

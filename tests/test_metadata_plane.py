@@ -370,8 +370,8 @@ def test_layer_that_raises_still_flushes_buffered_rows(spark, iso_ctx):
 
 
 def test_concurrent_commits_lose_no_update(spark):
-    """Units of one run commit from concurrent threads
-    (max_parallel_units): every upsert and every buffered row survives."""
+    """Units of one run commit from concurrent threads: every upsert and
+    every buffered row survives."""
     fmt = ParquetFormat()
     control = ControlTable(spark, fmt, table="metadata.mp_stress_control")
     audit = AuditLogger(spark, fmt, table="metadata.mp_stress_audit")

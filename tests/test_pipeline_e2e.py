@@ -188,8 +188,8 @@ def test_cli_main_runs(spark, monkeypatch, pipeline_run):
 
 @pytest.mark.slow
 def test_parallel_units_match_sequential(spark, pipeline_run):
-    """max_parallel_units: concurrent cross-target units produce the same
-    tables/metadata as sequential execution (shared-target units grouped)."""
+    """Concurrent cross-target units produce the same tables/metadata as
+    sequential execution (units sharing a target run one after another)."""
     from metadata_driven_etl_spark.config.model import PipelineConfig
     from metadata_driven_etl_spark.plans.pipeline import BronzeLayer, PipelineContext
 
@@ -218,7 +218,6 @@ def test_parallel_units_match_sequential(spark, pipeline_run):
             }
             for i in (1, 2)
         ],
-        "default": {"max_parallel_units": 4},
     }
     ctx = PipelineContext(spark=spark, table_format=ParquetFormat())
     results = BronzeLayer(ctx, PipelineConfig.from_dict(cfg)).run("2024-01-15")

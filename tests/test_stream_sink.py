@@ -80,10 +80,12 @@ def target(spark):
     spark.sql(f"DROP DATABASE IF EXISTS {DB}")
 
 
-def test_merge_stream_drains_within_budget_and_restarts(spark, tmp_path, target):
+def test_merge_stream_drains_within_budget_and_restarts(
+    spark, tmp_path, target, persistent_rdds
+):
     src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
     sc = spark.sparkContext
-    persistent = lambda: sc._jsc.sc().getPersistentRDDs().size()  # noqa: E731
+    persistent = persistent_rdds()
     expected = lambda: _rows(  # noqa: E731
         _aggregate(spark.read.schema(SCHEMA).parquet(src))
     )

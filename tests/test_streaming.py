@@ -445,6 +445,55 @@ def test_streaming_near_dedup_equals_sequential_batches(
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     spark.sql("DROP DATABASE IF EXISTS stream_sink")
 
+
+def test_streaming_near_dedup_releases_each_batch_survivors(
+    spark, tmp_path, persistent_rdds
+):
+    """Each micro-batch checkpoints its survivor set for its two appends;
+    once the batch is written the blocks are released, so a run of
+    batches leaves the persistent-RDD count where it started."""
+    import os
+    import time as _time
+
+    from metadata_driven_etl_spark.io.writer import ParquetFormat
+    from metadata_driven_etl_spark.streaming.dedup_sink import dedup_stream
+
+    out_t, idx_t = "stream_sink.rel_docs", "stream_sink.rel_docs_bands"
+    for t in (out_t, idx_t):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    src_dir = str(tmp_path / "arrivals")
+    os.makedirs(src_dir)
+    words = ["alpha", "beta", "gamma", "delta", "omega", "sigma", "kappa"]
+    for wave in range(3):
+        docs = [
+            (wave * 10 + i, " ".join(words[(i + k) % 7] for k in range(6 + i)))
+            for i in range(4)
+        ]
+        spark.createDataFrame(docs, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(src_dir)
+        _time.sleep(1.1)  # distinct modTimes: one file per batch, in order
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+    persistent = persistent_rdds()
+    before = persistent()
+    q = dedup_stream(
+        stream, out_t, idx_t, table_format=ParquetFormat(),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(q.recentProgress) >= 3
+    assert spark.table(out_t).count() > 0
+    assert persistent() == before
+    for t in (out_t, idx_t):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP DATABASE IF EXISTS stream_sink")
+
+
 @pytest.mark.parametrize("crash_mode", ["between_appends", "after_both"])
 @pytest.mark.slow
 def test_streaming_dedup_replay_guard_survives_mid_batch_crash(

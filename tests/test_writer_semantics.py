@@ -1,8 +1,11 @@
 """TableFormat write-path semantics: dynamic partition overwrite column
-alignment, merge and rewrite partition preservation, released checkpoint
-blocks, the batch merge's job budget, backfill-safe behaviors."""
+alignment and independence from the session conf, merge and rewrite
+partition preservation, released checkpoint blocks, the batch merge's job
+budget, backfill-safe behaviors."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -47,6 +50,45 @@ def test_overwrite_partitions_only_touches_written_partitions(spark, fmt):
     t = spark.table(tbl)
     assert t.filter("part = '1'").count() == 1
     assert t.filter("part != '1'").count() == 75  # untouched history
+
+
+def test_overwrite_partitions_ignores_a_concurrent_static_session_conf(
+    spark, fmt
+):
+    """Units write from concurrent threads that share the session conf.
+    While one thread keeps setting ``partitionOverwriteMode`` to static,
+    rewriting one partition of a two-partition table must leave the other
+    one in place. When the write switched the session conf to dynamic and
+    back, the other thread's static could land in between, and the
+    static insertInto wiped the sibling partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    tbl = "default.wp_dyn_race"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    fmt.overwrite(
+        spark.createDataFrame([Row(part="a", v=0), Row(part="b", v=0)]),
+        tbl, ["part"],
+    )
+    prev = spark.conf.get(key)
+    stop = threading.Event()
+
+    def keep_static():
+        while not stop.is_set():
+            spark.conf.set(key, "static")
+
+    flipper = threading.Thread(target=keep_static)
+    flipper.start()
+    try:
+        for i in range(1, 9):
+            fmt.overwrite_partitions(
+                spark.createDataFrame([Row(part="a", v=i)]), tbl, ["part"]
+            )
+            got = {(r.part, r.v) for r in spark.table(tbl).collect()}
+            assert got == {("a", i), ("b", 0)}, (i, got)
+    finally:
+        stop.set()
+        flipper.join(timeout=30)
+        spark.conf.set(key, prev)
+    assert not flipper.is_alive()
 
 
 def test_merge_preserves_partition_spec(spark, fmt):
@@ -113,7 +155,9 @@ def _lazy_agg(spark, i):
     )
 
 
-def test_one_shot_merges_and_rewrites_release_their_blocks(spark, fmt):
+def test_one_shot_merges_and_rewrites_release_their_blocks(
+    spark, fmt, persistent_rdds
+):
     """A batch merge and a rewrite each checkpoint the table's new rows
     before the overwrite; once the call returns those blocks are
     released, so repeated calls leave the persistent-RDD count where it
@@ -122,7 +166,7 @@ def test_one_shot_merges_and_rewrites_release_their_blocks(spark, fmt):
     tbl = "default.wp_merge_blocks"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     fmt.overwrite(_lazy_agg(spark, 0), tbl)
-    persistent = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: E731
+    persistent = persistent_rdds()
     before = persistent()
     for i in range(1, 7):
         assert fmt.merge(spark, tbl, _lazy_agg(spark, i), keys=["id"]) == 10
