@@ -245,8 +245,13 @@ class _LayerBase:
                 for i in [i for i, deps in waiting.items() if not deps]:
                     del waiting[i]
                     # wrapped here, in the caller's thread, so each unit
-                    # gets a copy of the caller's local properties
-                    run = inheritable_thread_target(spark)(self._run_unit)
+                    # gets a copy of the caller's local properties. With
+                    # PYSPARK_PIN_THREAD=false threads share them and
+                    # PySpark hands the session back instead.
+                    inherit = inheritable_thread_target(spark)
+                    run = self._run_unit
+                    if callable(inherit):
+                        run = inherit(run)
                     running[pool.submit(run, units[i], runner)] = i
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for f in done:
