@@ -50,6 +50,25 @@ def _require(cond: bool, msg: str) -> None:
         raise ConfigError(msg)
 
 
+_UNIT_ID_FIELDS = ("source_id", "transform_id", "model_id", "pipeline_id")
+
+
+def unit_id(unit) -> str:
+    """The id of a source, transform, gold model or corpus pipeline."""
+    return next(getattr(unit, f) for f in _UNIT_ID_FIELDS if hasattr(unit, f))
+
+
+def _unique_ids(units) -> tuple:
+    """``units`` as a tuple, unless two share an id: audit rows, control
+    state and a full source's ``source_id`` partition are keyed by it, so
+    the second unit would silently overwrite the first one's rows."""
+    units = tuple(units)
+    ids = [unit_id(u) for u in units]
+    dup = next((i for n, i in enumerate(ids) if i in ids[:n]), None)
+    _require(dup is None, f"duplicate unit id {dup!r}")
+    return units
+
+
 @dataclass(frozen=True)
 class SourceConfig:
     """One bronze ingestion unit (reference bronze_config.yaml:4-40)."""
@@ -974,11 +993,11 @@ class PipelineConfig:
     @staticmethod
     def from_dict(d: dict[str, Any]) -> "PipelineConfig":
         return PipelineConfig(
-            sources=tuple(SourceConfig.from_dict(s) for s in d.get("sources") or []),
-            transformations=tuple(
+            sources=_unique_ids(SourceConfig.from_dict(s) for s in d.get("sources") or []),
+            transformations=_unique_ids(
                 SilverTransform.from_dict(t) for t in d.get("transformations") or []
             ),
-            models=tuple(GoldModel.from_dict(m) for m in d.get("models") or []),
+            models=_unique_ids(GoldModel.from_dict(m) for m in d.get("models") or []),
             defaults=LayerDefaults.from_dict(d.get("default")),
         )
 
@@ -1013,20 +1032,16 @@ def lineage_edges(config: "PipelineConfig") -> list[tuple[str, str, str]]:
     """
     import re
 
-    edges: list[tuple[str, str, str]] = []
-    for s in config.sources:
-        up = s.source_path or s.source_id
-        edges.append((up, s.target_table, s.source_id))
-    sql_units = [
-        (t.sql_query, t.target_table, t.transform_id)
-        for t in config.transformations
-    ] + [(m.sql_query, m.target_table, m.model_id) for m in config.models]
+    edges = [
+        (s.source_path or s.source_id, s.target_table, s.source_id)
+        for s in config.sources
+    ]
     ident = re.compile(
         r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w]*\.[A-Za-z_][\w]*)", re.IGNORECASE
     )
-    for sql, target, uid in sql_units:
-        for up in dict.fromkeys(ident.findall(sql)):
-            edges.append((up, target, uid))
+    for u in config.transformations + config.models:
+        for up in dict.fromkeys(ident.findall(u.sql_query)):
+            edges.append((up, u.target_table, unit_id(u)))
     return edges
 
 
@@ -1401,7 +1416,7 @@ class CorpusConfig:
     @staticmethod
     def from_dict(d: dict[str, Any]) -> "CorpusConfig":
         return CorpusConfig(
-            pipelines=tuple(
+            pipelines=_unique_ids(
                 CorpusPipelineConfig.from_dict(p)
                 for p in d.get("corpus_pipelines") or []
             ),

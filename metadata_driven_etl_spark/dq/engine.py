@@ -272,6 +272,28 @@ class DataQualityEngine:
             return out, F.coalesce(fresh, F.lit(False))
         raise ValueError(f"unknown rule_type {rule.rule_type!r}")
 
+    def _rule_counts(
+        self, df: DataFrame, rules: list[DQRuleConfig]
+    ) -> tuple[DataFrame, dict[str, str], DataFrame]:
+        """``df`` with one boolean validity column per rule (plus the
+        rules' helper columns), the rule-name → validity-column map, and
+        the lazy one-row aggregate of every rule's counts: ``__total``
+        rows and ``__v_<i>`` valid rows for ``rules[i]``."""
+        valid_cols = {r.rule_name: f"__dq_valid_{r.rule_name}" for r in rules}
+        work, validity = df, {}
+        for r in rules:
+            work, validity[valid_cols[r.rule_name]] = self._condition(work, r)
+        work = work.withColumns(validity)
+        counts = work.agg(
+            F.count(F.lit(1)).alias("__total"),
+            *[
+                F.sum(F.when(F.col(valid_cols[r.rule_name]), 1).otherwise(0))
+                .alias(f"__v_{i}")
+                for i, r in enumerate(rules)
+            ],
+        )
+        return work, valid_cols, counts
+
     # -- main entry ---------------------------------------------------------
 
     def metrics_df(self, df: DataFrame, rules: list[DQRuleConfig]) -> DataFrame:
@@ -281,19 +303,7 @@ class DataQualityEngine:
         Schema: rule_name string, total_count long, valid_count long,
         invalid_count long.
         """
-        work = df
-        validity: dict[str, Column] = {}
-        for rule in rules:
-            work, cond = self._condition(work, rule)
-            validity[rule.rule_name] = cond
-
-        aggs = [F.count(F.lit(1)).alias("__total")] + [
-            F.sum(F.when(validity[r.rule_name], 1).otherwise(0)).alias(
-                f"__v_{i}"
-            )
-            for i, r in enumerate(rules)
-        ]
-        one_row = work.agg(*aggs)
+        _, _, one_row = self._rule_counts(df, rules)
         stack_args = ", ".join(
             f"'{r.rule_name}', __v_{i}" for i, r in enumerate(rules)
         )
@@ -324,31 +334,15 @@ class DataQualityEngine:
         if not rules:
             return DQResult(df=df)
 
-        work = df
-        validity: dict[str, Column] = {}
-        for rule in rules:
-            work, cond = self._condition(work, rule)
-            validity[rule.rule_name] = cond
-
-        # materialize validity as columns so metrics + actions share them
-        valid_cols = {r.rule_name: f"__dq_valid_{r.rule_name}" for r in rules}
-        for r in rules:
-            work = work.withColumn(valid_cols[r.rule_name], validity[r.rule_name])
-
-        # ONE aggregation pass for every rule's metrics
-        aggs = [F.count(F.lit(1)).alias("__total")]
-        for r in rules:
-            aggs.append(
-                F.sum(F.when(F.col(valid_cols[r.rule_name]), 1).otherwise(0)).alias(
-                    r.rule_name
-                )
-            )
-        row = work.agg(*aggs).collect()[0]
+        # validity as columns, so metrics and actions share them; ONE
+        # aggregation pass for every rule's metrics
+        work, valid_cols, counts = self._rule_counts(df, rules)
+        row = counts.collect()[0]
         total = row["__total"]
 
         metrics, rejected = [], []
-        for r in rules:
-            valid = int(row[r.rule_name] or 0)
+        for i, r in enumerate(rules):
+            valid = int(row[f"__v_{i}"] or 0)
             m = DQRuleMetrics(
                 rule_name=r.rule_name,
                 rule_type=r.rule_type,

@@ -14,7 +14,10 @@ tables end up unpartitioned despite config (SURVEY.md §2.14#3). This seam
 - owns the one path that overwrites a table its own plan reads
   (``_checkpointed_overwrite``): ``TableFormat.rewrite`` for a computed
   table, ``MirroredTable`` for every parquet merge, batch or stream.
-  Callers never checkpoint before an overwrite themselves.
+  Callers never checkpoint before an overwrite themselves,
+- owns every local checkpoint the engine makes: :func:`checkpoint` is the
+  one call, and the :func:`owned` block open in the calling thread
+  releases the checkpoint's blocks when it exits (SCALE.md §5.5).
 
 Scale notes: ``overwrite_partitions`` uses dynamic partition overwrite —
 an incremental run only rewrites the partitions it produced, never the
@@ -363,8 +366,8 @@ class TableFormat:
             partition_by = partition_columns(spark, table) or None
         obs = Observation()
         counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        _, release = _checkpointed_overwrite(self, counted, table, partition_by)
-        release()
+        with owned():
+            _checkpointed_overwrite(self, counted, table, partition_by)
         spark.catalog.refreshTable(table)
         return int(obs.get["rows"])
 
@@ -436,7 +439,7 @@ class MirroredTable:
         self._rows: DataFrame | None = None
         self._num_files = 1
         self._partition_by: list[str] | None = None
-        self._release: Callable[[], None] = lambda: None
+        self._owner = CheckpointOwner()
 
     def merge(self, source: DataFrame) -> int:
         """Upsert ``source`` (unique per key, else DuplicateSourceKeysError)
@@ -448,7 +451,7 @@ class MirroredTable:
             validate_unique_keys,
         )
 
-        with persisted(source):
+        with persisted(source), owned() as block:
             rows = validate_unique_keys(source, self.keys)
             if not rows:
                 return 0
@@ -461,17 +464,18 @@ class MirroredTable:
                 merged = upsert(self._rows, source, self.keys).coalesce(
                     self._num_files
                 )
-            merged, release = _checkpointed_overwrite(
+            merged = _checkpointed_overwrite(
                 self.table_format, merged, self.table, self._partition_by
             )
+            owner = block.keep()
         self.release()
-        self._loaded, self._rows, self._release = True, merged, release
+        self._loaded, self._rows, self._owner = True, merged, owner
         return rows
 
     def release(self) -> None:
         """Drop the copy's blocks; the next merge reads the table again."""
-        self._release()
-        self._loaded, self._release = False, lambda: None
+        self._owner.release()
+        self._loaded = False
 
     def _load(self, spark: SparkSession) -> None:
         self._rows, self._partition_by = None, None
@@ -496,36 +500,68 @@ def persisted(df: DataFrame) -> Iterator[DataFrame]:
         df.unpersist()
 
 
-def released_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
-    """An eager local checkpoint of ``df`` and a function that drops its
-    blocks. ``DataFrame.unpersist`` does not reach the blocks: they belong
-    to the checkpointed RDD, which the checkpoint's plan (a
-    ``LogicalRDD``) holds, so the handle is taken where it is made."""
-    checkpoint = df.localCheckpoint(eager=True)
-    rdd = checkpoint._jdf.queryExecution().logical().rdd()
-    return checkpoint, lambda: rdd.unpersist(False)
+class CheckpointOwner:
+    """The local checkpoints of one :func:`owned` block or, after
+    :meth:`keep`, of whoever took them over."""
 
+    def __init__(self) -> None:
+        self._rdds: list = []
 
-def checkpoints_read_by(df: DataFrame) -> Callable[[], None]:
-    """A function that drops the blocks of every local checkpoint ``df``'s
-    plan reads (its locally checkpointed ``LogicalRDD`` leaves), such as
-    one an operator made inside itself. Call it once nothing reads those
-    checkpoints any more, e.g. after a checkpoint of ``df`` itself."""
-    rdds, stack = [], [df._jdf.queryExecution().logical()]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "LogicalRDD":
-            rdd = node.rdd()
-            if rdd.isLocallyCheckpointed():
-                rdds.append(rdd)
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
+    def keep(self) -> CheckpointOwner:
+        """Hand this block's checkpoints to a new owner, which keeps them
+        until its :meth:`release`; the block no longer releases them."""
+        kept = CheckpointOwner()
+        kept._rdds, self._rdds = self._rdds, []
+        return kept
 
-    def release() -> None:
+    def release(self) -> None:
+        """Drop the blocks of every checkpoint held. ``DataFrame.unpersist``
+        does not reach them: they belong to the checkpointed RDD, which
+        :func:`checkpoint` takes from the checkpoint's ``LogicalRDD``."""
+        rdds, self._rdds = self._rdds, []
         for rdd in rdds:
             rdd.unpersist(False)
 
-    return release
+
+_BLOCKS = threading.local()  # .owners: the thread's open blocks, innermost last
+
+
+@contextmanager
+def owned() -> Iterator[CheckpointOwner]:
+    """A block that owns the local checkpoints made inside it: each
+    :func:`checkpoint` belongs to the innermost block open in its thread,
+    which releases them all when it exits, by returning or by raising.
+    Outside any block nothing is released until Spark's ContextCleaner
+    finds the frame unreachable after a JVM garbage collection.
+
+    Contract: a frame that reads a block's checkpoint, directly or through
+    a lazy plan, must not be read after the block exits; the read raises
+    ``Py4JJavaError``. A block hands back counts, writes tables and keeps
+    schemas, never a frame to read later. ``_LayerBase._run_unit`` opens
+    one per unit (it returns a count; the data dictionary reads only the
+    written frame's schema), the streaming dedup sink one per micro-batch
+    and :meth:`TableFormat.rewrite` one per call. A copy that outlives its
+    block, like :class:`MirroredTable`'s, is taken over with
+    :meth:`CheckpointOwner.keep`."""
+    owner = CheckpointOwner()
+    owners = _BLOCKS.__dict__.setdefault("owners", [])
+    owners.append(owner)
+    try:
+        yield owner
+    finally:
+        owners.pop()
+        owner.release()
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """A local checkpoint of ``df``, owned by the innermost :func:`owned`
+    block open in this thread; lazy unless ``eager``, so the first action
+    that reads it computes its blocks."""
+    checkpointed = df.localCheckpoint(eager=eager)
+    owners = getattr(_BLOCKS, "owners", None)
+    if owners:
+        owners[-1]._rdds.append(checkpointed._jdf.queryExecution().logical().rdd())
+    return checkpointed
 
 
 def _checkpointed_overwrite(
@@ -533,22 +569,19 @@ def _checkpointed_overwrite(
     df: DataFrame,
     table: str,
     partition_by: Sequence[str] | None,
-) -> tuple[DataFrame, Callable[[], None]]:
-    """Overwrite ``table`` from an eager local checkpoint of ``df``, and
-    return the checkpoint with a function that drops its blocks.
+) -> DataFrame:
+    """Overwrite ``table`` from an eager :func:`checkpoint` of ``df`` and
+    return the checkpoint.
 
     The engine's one way to overwrite a table that its own plan may read.
     ``saveAsTable`` drops the table before its write job runs, so ``df``
     is computed in full first: a failure while computing it (a task
-    error, lost blocks) fails here with the table intact. A failed
-    overwrite releases the checkpoint and re-raises."""
-    checkpoint, release = released_checkpoint(df)
-    try:
-        table_format.overwrite(checkpoint, table, partition_by)
-    except Exception:
-        release()
-        raise
-    return checkpoint, release
+    error, lost blocks) fails here with the table intact. Callers run it
+    inside an :func:`owned` block, so a failed overwrite releases the
+    checkpoint as its error leaves the block."""
+    checkpointed = checkpoint(df, eager=True)
+    table_format.overwrite(checkpointed, table, partition_by)
+    return checkpointed
 
 
 class ParquetFormat(TableFormat):

@@ -14,7 +14,6 @@ per event.
 from __future__ import annotations
 
 import getpass
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,7 +59,6 @@ class AuditLogger(AppendTable):
     ):
         super().__init__(spark, table_format, table, AUDIT_SCHEMA)
         self.run_id = run_id or str(uuid.uuid4())
-        self._starts: dict[str, float] = {}
         try:
             self._user = getpass.getuser()
         except Exception:
@@ -78,38 +76,30 @@ class AuditLogger(AppendTable):
 
     def log_start(self, layer: str, operation: str, component: str,
                   source_id: str | None = None, target_table: str | None = None) -> str:
-        key = f"{layer}/{component}"
-        self._starts[key] = time.perf_counter()
         return self._emit(
             layer=layer, operation=operation, component=component,
             source_id=source_id, target_table=target_table, status="STARTED",
         )
 
     def log_success(self, layer: str, operation: str, component: str,
-                    rows_processed: int | None = None,
+                    seconds: float, rows_processed: int | None = None,
                     source_id: str | None = None,
                     target_table: str | None = None) -> str:
-        elapsed = self._elapsed(layer, component)
         return self._emit(
             layer=layer, operation=operation, component=component,
             source_id=source_id, target_table=target_table, status="SUCCESS",
-            rows_processed=rows_processed, execution_time_seconds=elapsed,
+            rows_processed=rows_processed, execution_time_seconds=seconds,
         )
 
     def log_error(self, layer: str, operation: str, component: str,
-                  error: Exception | str,
+                  error: Exception | str, seconds: float,
                   source_id: str | None = None,
                   target_table: str | None = None) -> str:
-        elapsed = self._elapsed(layer, component)
         return self._emit(
             layer=layer, operation=operation, component=component,
             source_id=source_id, target_table=target_table, status="ERROR",
-            error_message=str(error)[:4000], execution_time_seconds=elapsed,
+            error_message=str(error)[:4000], execution_time_seconds=seconds,
         )
-
-    def _elapsed(self, layer: str, component: str) -> float | None:
-        t0 = self._starts.pop(f"{layer}/{component}", None)
-        return round(time.perf_counter() - t0, 3) if t0 is not None else None
 
     # -- query helpers (reference audit_logger.py:241-285) ------------------
 

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from metadata_driven_etl_spark.io.writer import checkpoint
 from metadata_driven_etl_spark.operators.text import (
     norm_text,
     sql_norm_text,
@@ -175,10 +176,11 @@ def _iteration_regime(
 def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     """Truncate lineage and cache a frame consumed by multiple subtrees.
 
-    ``None`` (local default) uses ``localCheckpoint`` — blocks live in
-    executor storage, lost with an executor. On a real cluster pass a
-    durable path (HDFS/S3): set as the context's checkpoint dir, each
-    materialization then survives executor loss.
+    ``None`` (local default) uses ``io.writer.checkpoint`` — blocks live
+    in executor storage, lost with an executor, released when the caller's
+    ``io.writer.owned`` block exits. On a real cluster pass a durable path
+    (HDFS/S3): set as the context's checkpoint dir, each materialization
+    then survives executor loss and leaves no blocks behind.
 
     NOTE (ADVICE r5): the durable path runs persist + EAGER checkpoint —
     Spark jobs execute at DataFrame-CONSTRUCTION time (Spark's documented
@@ -208,7 +210,7 @@ def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
         out = cached.checkpoint(eager=True)
         cached.unpersist()
         return out
-    return df.localCheckpoint(eager=False)
+    return checkpoint(df)
 
 
 def minhash_signature(
@@ -1013,7 +1015,7 @@ def keep_best_per_cluster(
     joined = (
         _materialize(joined, checkpoint_dir)
         if checkpoint_dir is not None
-        else joined.localCheckpoint(eager=True)
+        else checkpoint(joined, eager=True)
     )
     singles = joined.filter(F.col("n_members") == 1).select(
         cluster_col,
@@ -1595,7 +1597,7 @@ def dup_flow_matrix(
         .filter(F.col("tot") > 1)
         .select(fp_col)
     )
-    k = c.join(dup, fp_col).localCheckpoint(eager=False)
+    k = checkpoint(c.join(dup, fp_col))
     a = k.select(
         fp_col, F.col(container_col).alias(out_a), F.col("n").alias("na")
     )

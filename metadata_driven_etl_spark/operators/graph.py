@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.io.writer import checkpoint
 from metadata_driven_etl_spark.operators.dedup import (
     _iteration_regime,
     _materialize,
@@ -237,9 +238,7 @@ def triangle_counts(
     not 2+3 times (the repo's multi-consumer discipline; measured 5.6s →
     ~2s on the copurchase workload at sf0.1).
     """
-    canon = _canonical_undirected(edges, src_col, dst_col).localCheckpoint(
-        eager=False
-    )
+    canon = checkpoint(_canonical_undirected(edges, src_col, dst_col))
     deg = (
         canon.select(F.col("u").alias("node"))
         .union(canon.select(F.col("v").alias("node")))
@@ -253,11 +252,11 @@ def triangle_counts(
               F.col("v") == F.col("_nv"))
     )
     lower_first = F.struct("du", "u") < F.struct("dv", "v")
-    oriented = ed.select(
+    oriented = checkpoint(ed.select(
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).localCheckpoint(eager=False)
+    ))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
@@ -353,9 +352,7 @@ def resource_allocation_topk(
     so a pair needs > 2^63/scale ≈ 9e6 common neighbors to overflow —
     lower ``scale`` for denser graphs.
     """
-    canon = _canonical_undirected(edges, src_col, dst_col).localCheckpoint(
-        eager=False
-    )
+    canon = checkpoint(_canonical_undirected(edges, src_col, dst_col))
     adj = canon.select(
         F.col("u").alias("z"), F.col("v").alias("nbr")
     ).union(canon.select(F.col("v").alias("z"), F.col("u").alias("nbr")))
@@ -365,7 +362,7 @@ def resource_allocation_topk(
         .where(F.col("d") <= max_degree)
         .select("z", F.expr(f"{scale} div d").alias("w"))
     )
-    adjw = adj.join(w, on="z").localCheckpoint(eager=False)
+    adjw = checkpoint(adj.join(w, on="z"))
     l, r = adjw.alias("l"), adjw.alias("r")
     pairs = (
         l.join(

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.io.writer import checkpoint
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -874,10 +876,9 @@ def mmr_select(
             ).alias("rel"),
         )
     )
-    cand = (
+    cand = checkpoint(
         rel.orderBy(F.desc("rel"), F.col(id_col))
         .limit(m)
-        .localCheckpoint(eager=False)
     )
     a = cand.select(
         F.col(id_col).alias("ia"),
@@ -889,7 +890,7 @@ def mmr_select(
         F.col("_vd").alias("_vb"),
         F.col("_vnorm").alias("_nb"),
     )
-    sims = (
+    sims = checkpoint(
         a.join(F.broadcast(b), F.col("ia") != F.col("ib"))
         .select(
             "ia",
@@ -900,10 +901,9 @@ def mmr_select(
                 6,
             ).alias("sim"),
         )
-        .localCheckpoint(eager=False)
     )
-    candr = cand.select(id_col, "rel").localCheckpoint(eager=False)
-    selected = (
+    candr = checkpoint(cand.select(id_col, "rel"))
+    selected = checkpoint(
         candr.orderBy(F.desc("rel"), F.col(id_col))
         .limit(1)
         .select(
@@ -912,7 +912,6 @@ def mmr_select(
             "rel",
             (F.col("rel") / F.lit(2.0)).alias("mmr_score"),
         )
-        .localCheckpoint(eager=False)
     )
     for step in range(2, k + 1):
         sel_ids = selected.select(id_col)
@@ -941,7 +940,7 @@ def mmr_select(
             .orderBy(F.desc("mmr_score"), F.col(id_col))
             .limit(1)
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
+        selected = checkpoint(selected.unionByName(pick))
     return selected
 
 

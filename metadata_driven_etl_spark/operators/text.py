@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.io.writer import checkpoint
+
 # --- canonical normalization (shared by dedup + text ops) -------------------
 
 
@@ -527,14 +529,13 @@ def trigram_novelty(
     frame is consumed twice (claimant build + scoring) and so is
     localCheckpoint-materialized once."""
     toks = docs.select(id_col, tokens(text_col).alias("__toks"))
-    tri = (
+    tri = checkpoint(
         toks.where(F.size("__toks") >= 3)
         .select(
             id_col,
             F.explode(trigrams(F.col("__toks"))).alias("gram"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     first = tri.groupBy("gram").agg(F.min(id_col).alias("__first"))
     return (
@@ -575,11 +576,10 @@ def bigram_lm_score(
     against) — at a sane floor those are exactly the gibberish docs a
     typicality filter exists to flag.
     """
-    pairs = (
+    pairs = checkpoint(
         docs.select(id_col, bigrams(text_col).alias("bigs"))
         .filter(F.size("bigs") >= 1)
         .select(id_col, F.explode("bigs").alias("bigram"))
-        .localCheckpoint(eager=False)
     )
     counts = pairs.groupBy("bigram").agg(
         F.count(F.lit(1)).alias("bg_freq")
@@ -663,17 +663,16 @@ def doc_cosine_pairs(
         tf = tf.join(kept, F.col("term") == F.col("_kept_term")).drop(
             "_kept_term"
         )
-    tf = tf.localCheckpoint(eager=False)
+    tf = checkpoint(tf)
     # Materialize the norms ONCE (guide §2.4, r13): the two rename-only
     # consumers below (na/nb join sides) are separate subtrees to Spark,
     # so without this the |corpus|-row norm aggregation (HashAggregate +
     # Exchange over the full postings frame) executed twice — once per
     # side — in the r12 plan. The materialized frame is |docs| rows of
     # (id, bigint).
-    norms = (
+    norms = checkpoint(
         tf.groupBy(id_col)
         .agg(F.sum(F.col("tf") * F.col("tf")).alias("norm_sq"))
-        .localCheckpoint(eager=False)
     )
     a = tf.select(
         F.col("term").alias("_term_a"),
@@ -825,7 +824,7 @@ def build_postings(
         if not vocabulary:
             raise ValueError("build_postings: empty vocabulary")
         toks = toks.filter(F.col("tok").isin(*vocabulary))
-    return toks.localCheckpoint(eager=False)
+    return checkpoint(toks)
 
 
 def phrase_match_in_postings(
@@ -892,10 +891,9 @@ def rake_keyphrase_scores(
         F.col("stop") == 0
     )
     w_ph = Window.partitionBy(id_col, "island")
-    kept = (
+    kept = checkpoint(  # feeds word stats AND phrases
         isl.withColumn("plen", F.count(F.lit(1)).over(w_ph))
         .filter(F.col("plen") <= max_phrase)
-        .localCheckpoint(eager=False)  # feeds word stats AND phrases
     )
     ws = kept.groupBy("tok").agg(
         F.count(F.lit(1)).alias("freq"), F.sum("plen").alias("deg")

@@ -66,6 +66,7 @@ from metadata_driven_etl_spark.config.model import (
     CorpusStageConfig,
 )
 from metadata_driven_etl_spark.dq.engine import DQRuleMetrics
+from metadata_driven_etl_spark.io.writer import checkpoint
 from metadata_driven_etl_spark.operators import decontam as decontam_ops
 from metadata_driven_etl_spark.operators import dedup as dedup_ops
 from metadata_driven_etl_spark.operators import text as text_ops
@@ -81,9 +82,6 @@ class CorpusLayer(_LayerBase):
     """Runs every enabled corpus pipeline in a :class:`CorpusConfig`."""
 
     layer_name = "corpus"
-
-    def __init__(self, ctx: PipelineContext, config: CorpusConfig):
-        super().__init__(ctx, config)
 
     def run(self, run_date: str) -> list[UnitResult]:
         return self._run_units(
@@ -108,7 +106,7 @@ class CorpusLayer(_LayerBase):
             # the survival metric AND truncates the growing plan so later
             # stages (which may self-join, e.g. near_dedup) don't
             # re-execute every earlier stage per subtree.
-            df = df.localCheckpoint(eager=True)
+            df = checkpoint(df, eager=True)
             rows_out = df.count()
             stage_metrics.append(
                 DQRuleMetrics(
@@ -409,11 +407,10 @@ def _semantic_dedup(
     )
     # materialize once: the frame feeds pair-gen (both self-join sides)
     # and the CC vertex set — self-joined lineage gets no ReusedExchange
-    emb = (
+    emb = checkpoint(
         spark.table(stage.embedding_table)
         .select(*emb_cols)
         .join(df.select(id_col), id_col, "left_semi")
-        .localCheckpoint(eager=False)
     )
     pairs = sim_ops.embedding_near_dup_pairs(
         emb,

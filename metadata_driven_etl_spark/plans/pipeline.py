@@ -26,7 +26,7 @@ import re
 import time
 from collections.abc import Iterator, Sequence
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -37,12 +37,10 @@ from metadata_driven_etl_spark.config.model import (
     PipelineConfig,
     SilverTransform,
     SourceConfig,
+    unit_id,
 )
 from metadata_driven_etl_spark.dq.engine import DataQualityEngine, DQRejectError
-from metadata_driven_etl_spark.io.writer import (
-    TableFormat,
-    released_checkpoint,
-)
+from metadata_driven_etl_spark.io.writer import TableFormat, checkpoint, owned
 from metadata_driven_etl_spark.metadata.audit import AuditLogger
 from metadata_driven_etl_spark.metadata.control import ControlTable
 from metadata_driven_etl_spark.metadata.metrics import DataDictionary, DQMetricsStore
@@ -75,7 +73,6 @@ class PipelineContext:
     audit: AuditLogger = None  # type: ignore[assignment]
     dq_metrics: DQMetricsStore = None  # type: ignore[assignment]
     dictionary: DataDictionary = None  # type: ignore[assignment]
-    extras: dict = field(default_factory=dict)
 
     def __post_init__(self):
         self.spark.sql("CREATE DATABASE IF NOT EXISTS metadata")
@@ -178,11 +175,9 @@ class _LayerBase:
         return self.ctx.spark.sql(q, args={"processing_date": run_date})
 
     def _run_unit(self, unit, runner) -> UnitResult:
-        uid = getattr(unit, "source_id", None) or getattr(
-            unit, "transform_id", None
-        ) or getattr(unit, "model_id", None) or getattr(
-            unit, "pipeline_id", None
-        )
+        """Run one unit in an ``owned`` block: every checkpoint the unit
+        makes is released when it ends, and it hands back only a count."""
+        uid = unit_id(unit)
         if not unit.enabled:
             return UnitResult(uid, unit.target_table, "skipped")
         t0 = time.perf_counter()
@@ -190,17 +185,18 @@ class _LayerBase:
             self.layer_name, "process", uid, target_table=unit.target_table
         )
         try:
-            rows = runner(unit)
+            with owned():
+                rows = runner(unit)
             secs = round(time.perf_counter() - t0, 3)
             self.ctx.audit.log_success(
-                self.layer_name, "process", uid,
+                self.layer_name, "process", uid, secs,
                 rows_processed=rows, target_table=unit.target_table,
             )
             return UnitResult(uid, unit.target_table, "success", rows, secs)
         except Exception as e:  # per-unit isolation (M10)
             secs = round(time.perf_counter() - t0, 3)
             self.ctx.audit.log_error(
-                self.layer_name, "process", uid, e,
+                self.layer_name, "process", uid, e, secs,
                 target_table=unit.target_table,
             )
             return UnitResult(uid, unit.target_table, "error", 0, secs, str(e))
@@ -691,24 +687,13 @@ class GoldLayer(_LayerBase):
         path ever touches, and bucketing removes half that shuffle every
         cadence (all of it when the upstream ``snapshot_table`` is
         bucketed on the same keys by its own writer)."""
+        fmt, spark = self.ctx.table_format, self.ctx.spark
         # ONE consistent snapshot image for BOTH the diff and the
         # maintained-snapshot write: a lazy re-read of snapshot_table at
         # the copy write would persist whatever an upstream writer landed
         # in between — a snapshot that does NOT match the applied delta,
-        # silently skipping those rows' changes on every later run. Its
-        # blocks are dropped once both writes are done.
-        new, release = released_checkpoint(
-            self.ctx.spark.table(m.snapshot_table)
-        )
-        try:
-            return self._maintain_delta(m, run_date, new)
-        finally:
-            release()
-
-    def _maintain_delta(
-        self, m: GoldModel, run_date: str, new: DataFrame
-    ) -> int:
-        fmt, spark = self.ctx.table_format, self.ctx.spark
+        # silently skipping those rows' changes on every later run.
+        new = checkpoint(spark.table(m.snapshot_table), eager=True)
         snap_copy = snapshot_copy(m.target_table)
         gks = list(m.group_keys)
         sum_cols = dict(m.sum_cols)

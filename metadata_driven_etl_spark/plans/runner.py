@@ -65,20 +65,22 @@ def run_pipeline(
             ctx.audit.log_start(layer, "layer_run", f"{layer}_layer")
             layer_results = layer_cls(ctx, layer_cfg).run(run_date)
             results[layer] = layer_results
+            secs = round(time.perf_counter() - t0, 3)
             rows = sum(r.rows for r in layer_results)
             errs = [r for r in layer_results if r.status == "error"]
             if errs:
                 ctx.audit.log_error(
                     layer, "layer_run", f"{layer}_layer",
                     f"{len(errs)} unit(s) failed: {[r.unit_id for r in errs]}",
+                    secs,
                 )
             else:
                 ctx.audit.log_success(
-                    layer, "layer_run", f"{layer}_layer", rows_processed=rows
+                    layer, "layer_run", f"{layer}_layer", secs, rows_processed=rows
                 )
             print(
                 f"[{layer}] {len(layer_results)} unit(s), {rows} rows, "
-                f"{len(errs)} error(s), {time.perf_counter() - t0:.1f}s"
+                f"{len(errs)} error(s), {secs:.1f}s"
             )
     finally:
         ctx.audit.flush()  # the last layer_run row
@@ -130,6 +132,7 @@ def dry_run(config_dir: str, layers: list[str]) -> int:
         ConfigError,
         lineage_edges,
         load_corpus_config,
+        unit_id,
     )
 
     rc = 0
@@ -163,13 +166,8 @@ def dry_run(config_dir: str, layers: list[str]) -> int:
         cfg = configs[layer]
         units = list(cfg.sources) + list(cfg.transformations) + list(cfg.models)
         for u in units:
-            uid = (
-                getattr(u, "source_id", None)
-                or getattr(u, "transform_id", None)
-                or getattr(u, "model_id", None)
-            )
             state = "" if u.enabled else " (disabled)"
-            print(f"[{layer}] {uid} -> {u.target_table}{state}")
+            print(f"[{layer}] {unit_id(u)} -> {u.target_table}{state}")
         for up, down, uid in lineage_edges(cfg):
             print(f"[{layer}] lineage: {up} -> {down} ({uid})")
     return rc

@@ -21,6 +21,9 @@ screening is deterministic (fixed hash seeds, same replayed offsets), so
 the redone append writes the identical survivor set. Delta/transactional
 tables would subsume this; the guard keeps the parquet fallback correct.
 
+Each micro-batch runs in one ``io.writer.owned`` block: its survivor
+and band checkpoints are released when the batch ends, also by raising.
+
 Pre-seeding: when seeding ``index_table`` from an existing corpus, attach
 ``_batch_id = CAST(NULL AS LONG)`` to the ``lsh_bands`` output — the
 guard's null-safe filters keep seed rows visible to every batch.
@@ -40,9 +43,9 @@ from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.io.writer import (
     TableFormat,
-    checkpoints_read_by,
+    checkpoint,
+    owned,
     persisted,
-    released_checkpoint,
 )
 from metadata_driven_etl_spark.operators.dedup import (
     incremental_dedup_survivors,
@@ -73,7 +76,7 @@ def dedup_stream(
     owner = stream_df.sparkSession
 
     def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with persisted(batch_df) as batch:
+        with persisted(batch_df) as batch, owned():
             if not batch.isEmpty():
                 _screen(batch, batch_id)
 
@@ -140,33 +143,24 @@ def dedup_stream(
             shingle_n=shingle_n,
         )
         # materialize once: appended to BOTH tables below, and the second
-        # append must see the same survivor set the first one wrote. Its
-        # blocks, and those of the band checkpoint the screen made, are
-        # dropped once the batch is written.
-        release_inputs = checkpoints_read_by(survivors)
-        survivors, release = released_checkpoint(survivors)
-        release_inputs()
-        try:
-            if survivors.isEmpty():
-                return
-            if not out_done:
-                out_rows = survivors
-                if out_stamped:
-                    out_rows = out_rows.withColumn("_batch_id", F.lit(batch_id))
-                table_format.append(out_rows, output_table)
-            if not idx_done:
-                new_bands = lsh_bands(
-                    survivors, text_col, id_col, num_hashes, band_size,
-                    shingle_n,
-                )
-                if idx_stamped:
-                    new_bands = new_bands.withColumn(
-                        "_batch_id", F.lit(batch_id)
-                    )
-                table_format.append(new_bands, index_table)
-            refresh_owner_tables(owner, output_table, index_table)
-        finally:
-            release()
+        # append must see the same survivor set the first one wrote
+        survivors = checkpoint(survivors, eager=True)
+        if survivors.isEmpty():
+            return
+        if not out_done:
+            out_rows = survivors
+            if out_stamped:
+                out_rows = out_rows.withColumn("_batch_id", F.lit(batch_id))
+            table_format.append(out_rows, output_table)
+        if not idx_done:
+            new_bands = lsh_bands(
+                survivors, text_col, id_col, num_hashes, band_size,
+                shingle_n,
+            )
+            if idx_stamped:
+                new_bands = new_bands.withColumn("_batch_id", F.lit(batch_id))
+            table_format.append(new_bands, index_table)
+        refresh_owner_tables(owner, output_table, index_table)
 
     writer = (
         stream_df.writeStream.foreachBatch(screen_batch)

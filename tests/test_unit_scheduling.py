@@ -13,6 +13,7 @@ import time
 import pytest
 
 from metadata_driven_etl_spark.config.model import (
+    ConfigError,
     CorpusConfig,
     PipelineConfig,
 )
@@ -181,6 +182,31 @@ def test_dependencies_follow_every_table_reference():
          "stages": [{"stage": "quality_filter"}]},
     ]})
     assert unit_dependencies(corpus.pipelines) == [set(), {0}]
+
+
+def test_a_repeated_unit_id_is_rejected_at_load():
+    """Two full file sources with one source_id into one table overwrite
+    one partition, ``source_id=<id>``: the second would silently delete
+    the first one's rows while both report success. An id repeated within
+    a layer fails the load instead, disabled units included."""
+    src = {"source_id": "orders", "source_type": "file",
+           "target_table": "b.orders", "extract_strategy": "full"}
+    with pytest.raises(ConfigError, match="duplicate unit id 'orders'"):
+        PipelineConfig.from_dict({"sources": [
+            {**src, "source_path": "/data/a"},
+            {**src, "source_path": "/data/b", "enabled": False},
+        ]})
+    twice = lambda unit: [unit, {**unit, "target_table": "x.other"}]  # noqa: E731
+    with pytest.raises(ConfigError, match="'clean'"):
+        PipelineConfig.from_dict({"transformations": twice(
+            {"transform_id": "clean", "target_table": "s.clean",
+             "sql_query": "SELECT 1 AS id"})})
+    with pytest.raises(ConfigError, match="'agg'"):
+        PipelineConfig.from_dict({"models": twice(_model("agg", "SELECT 1"))})
+    with pytest.raises(ConfigError, match="'docs'"):
+        CorpusConfig.from_dict({"corpus_pipelines": twice(
+            {"pipeline_id": "docs", "input_path": "/data/docs.parquet",
+             "target_table": "c.docs", "stages": [{"stage": "quality_filter"}]})})
 
 
 def test_silver_unit_job_budget(spark, ctx):
