@@ -8,8 +8,8 @@ out (SURVEY.md §2.14 #1/#2/#8/#10):
   DataFrames + a collect PER RULE over the uncached input — O(rules × full
   scans), and counts can drift between actions on nondeterministic input.
   Here every rule becomes one boolean validity column on a single
-  DataFrame; metrics for ALL rules come from one aggregation pass (or, on
-  the write path, from ``df.observe`` — zero extra passes).
+  DataFrame; ``apply`` observes ALL rules' counts (``df.observe``) on the
+  one job that checkpoints its output — zero extra passes.
 - **Explicit NULL semantics.** ``rlike`` on NULL is NULL → the reference's
   valid+invalid counts don't add up for null-bearing columns. Every
   condition here is null-coalesced: NULL input is INVALID for not_null /
@@ -32,10 +32,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.config.model import DQRuleConfig
+from metadata_driven_etl_spark.io.writer import checkpoint
 
 
 @dataclass
@@ -56,8 +57,6 @@ class DQRuleMetrics:
 class DQResult:
     df: DataFrame  # rows after actions (filtered and/or tagged)
     metrics: list[DQRuleMetrics] = field(default_factory=list)
-    rejected_rules: list[str] = field(default_factory=list)
-    invalid_samples: dict[str, list] = field(default_factory=dict)
 
 
 class DQRejectError(RuntimeError):
@@ -65,9 +64,8 @@ class DQRejectError(RuntimeError):
 
 
 class DataQualityEngine:
-    def __init__(self, spark, sample_invalid: int = 0):
+    def __init__(self, spark):
         self.spark = spark
-        self.sample_invalid = sample_invalid
 
     # -- condition builders (row is VALID iff condition is True) -----------
 
@@ -274,24 +272,24 @@ class DataQualityEngine:
 
     def _rule_counts(
         self, df: DataFrame, rules: list[DQRuleConfig]
-    ) -> tuple[DataFrame, dict[str, str], DataFrame]:
+    ) -> tuple[DataFrame, dict[str, str], list[Column]]:
         """``df`` with one boolean validity column per rule (plus the
         rules' helper columns), the rule-name → validity-column map, and
-        the lazy one-row aggregate of every rule's counts: ``__total``
+        the aggregate expressions of every rule's counts: ``__total``
         rows and ``__v_<i>`` valid rows for ``rules[i]``."""
         valid_cols = {r.rule_name: f"__dq_valid_{r.rule_name}" for r in rules}
         work, validity = df, {}
         for r in rules:
             work, validity[valid_cols[r.rule_name]] = self._condition(work, r)
         work = work.withColumns(validity)
-        counts = work.agg(
+        counts = [
             F.count(F.lit(1)).alias("__total"),
             *[
                 F.sum(F.when(F.col(valid_cols[r.rule_name]), 1).otherwise(0))
                 .alias(f"__v_{i}")
                 for i, r in enumerate(rules)
             ],
-        )
+        ]
         return work, valid_cols, counts
 
     # -- main entry ---------------------------------------------------------
@@ -303,7 +301,8 @@ class DataQualityEngine:
         Schema: rule_name string, total_count long, valid_count long,
         invalid_count long.
         """
-        _, _, one_row = self._rule_counts(df, rules)
+        work, _, counts = self._rule_counts(df, rules)
+        one_row = work.agg(*counts)
         stack_args = ", ".join(
             f"'{r.rule_name}', __v_{i}" for i, r in enumerate(rules)
         )
@@ -326,71 +325,29 @@ class DataQualityEngine:
         """Evaluate all rules in one pass and apply their actions.
 
         Plan shape: augment df with helper cols → one validity column per
-        rule → ONE aggregation action computes every rule's counts → filter
-        to the conjunction of filter/reject-rule validity → drop helpers,
-        tag flags. The output DataFrame is lazy; only the metrics
-        aggregation executes here.
+        rule → observe every rule's counts → filter to the conjunction of
+        filter-rule validity → drop helpers, tag flags. One eager
+        :func:`io.writer.checkpoint` job computes the output and the
+        counts; no separate aggregation pass runs. A failing ``reject``
+        rule then raises. Otherwise ``df`` is that checkpoint, owned by
+        the caller's ``io.writer.owned()`` block (a silver unit's), so it
+        must not be read after the block (without rules: ``df`` as given).
         """
         if not rules:
             return DQResult(df=df)
 
-        # validity as columns, so metrics and actions share them; ONE
-        # aggregation pass for every rule's metrics
+        # validity as columns, so metrics and actions share them; the
+        # counts ride the output's own job
         work, valid_cols, counts = self._rule_counts(df, rules)
-        row = counts.collect()[0]
-        total = row["__total"]
-
-        metrics, rejected = [], []
-        for i, r in enumerate(rules):
-            valid = int(row[f"__v_{i}"] or 0)
-            m = DQRuleMetrics(
-                rule_name=r.rule_name,
-                rule_type=r.rule_type,
-                action=r.action_on_failure,
-                total_count=total,
-                valid_count=valid,
-                invalid_count=total - valid,
-            )
-            metrics.append(m)
-            if r.action_on_failure == "reject" and m.invalid_count > 0:
-                rejected.append(r.rule_name)
-            # freshness is a batch-ARRIVAL gate: a 0-row batch has no
-            # rows to flag, but silence is exactly the staleness the
-            # rule exists to catch — an empty feed must not sail
-            # through a reject gate on the technicality that
-            # invalid_count == 0. (filter/tag on an empty batch are
-            # vacuous either way.)
-            if (
-                r.rule_type == "freshness"
-                and r.action_on_failure == "reject"
-                and total == 0
-            ):
-                rejected.append(r.rule_name)
-
-        samples: dict[str, list] = {}
-        if self.sample_invalid:
-            for r in rules:
-                m = next(x for x in metrics if x.rule_name == r.rule_name)
-                if m.invalid_count:
-                    samples[r.rule_name] = (
-                        work.filter(~F.col(valid_cols[r.rule_name]))
-                        .select(*df.columns)
-                        .limit(self.sample_invalid)
-                        .collect()
-                    )
-
-        if rejected:
-            raise DQRejectError(
-                f"DQ reject: rule(s) {rejected} have invalid rows "
-                f"({ {m.rule_name: m.invalid_count for m in metrics} })"
-            )
+        obs = Observation()
+        work = work.observe(obs, *counts)
 
         # actions: filter = conjunction of filter-rule validity.
         # k_anonymity filters are deferred below every other filter:
         # the suppression guarantee is about the RELEASED population,
         # and another filter rule shrinking a quasi-identifier group
         # after the size was measured would release a <k group. The
-        # metrics above still report on the INPUT (the engine's
+        # observed counts still report on the INPUT (the engine's
         # valid+invalid=total contract); only the ACTION re-judges.
         out = work
         for r in rules:
@@ -431,6 +388,40 @@ class DataQualityEngine:
                     ),
                 )
         keep = df.columns + [r.flag_column for r in rules if r.action_on_failure == "tag"]
-        out = out.select(*keep)
-        return DQResult(df=out, metrics=metrics, rejected_rules=rejected,
-                        invalid_samples=samples)
+        out = checkpoint(out.select(*keep), eager=True)
+        row = obs.get
+        total = row["__total"]
+
+        metrics, rejected = [], []
+        for i, r in enumerate(rules):
+            valid = int(row[f"__v_{i}"] or 0)
+            m = DQRuleMetrics(
+                rule_name=r.rule_name,
+                rule_type=r.rule_type,
+                action=r.action_on_failure,
+                total_count=total,
+                valid_count=valid,
+                invalid_count=total - valid,
+            )
+            metrics.append(m)
+            if r.action_on_failure == "reject" and m.invalid_count > 0:
+                rejected.append(r.rule_name)
+            # freshness is a batch-ARRIVAL gate: a 0-row batch has no
+            # rows to flag, but silence is exactly the staleness the
+            # rule exists to catch — an empty feed must not sail
+            # through a reject gate on the technicality that
+            # invalid_count == 0. (filter/tag on an empty batch are
+            # vacuous either way.)
+            if (
+                r.rule_type == "freshness"
+                and r.action_on_failure == "reject"
+                and total == 0
+            ):
+                rejected.append(r.rule_name)
+
+        if rejected:
+            raise DQRejectError(
+                f"DQ reject: rule(s) {rejected} have invalid rows "
+                f"({ {m.rule_name: m.invalid_count for m in metrics} })"
+            )
+        return DQResult(df=out, metrics=metrics)

@@ -539,8 +539,10 @@ def owned() -> Iterator[CheckpointOwner]:
     ``Py4JJavaError``. A block hands back counts, writes tables and keeps
     schemas, never a frame to read later. ``_LayerBase._run_unit`` opens
     one per unit (it returns a count; the data dictionary reads only the
-    written frame's schema), the streaming dedup sink one per micro-batch
-    and :meth:`TableFormat.rewrite` one per call. A copy that outlives its
+    written frame's schema); a silver unit's block owns the checkpoint
+    ``DataQualityEngine.apply`` returns, which the unit writes. The
+    streaming dedup sink opens one per micro-batch and
+    :meth:`TableFormat.rewrite` one per call. A copy that outlives its
     block, like :class:`MirroredTable`'s, is taken over with
     :meth:`CheckpointOwner.keep`."""
     owner = CheckpointOwner()

@@ -109,10 +109,3 @@ class AuditLogger(AppendTable):
             df = df.filter(F.col("layer") == layer)
         # ORDER BY ts DESC LIMIT n → TakeOrderedAndProject (true top-k)
         return df.orderBy(F.desc("timestamp"), F.desc("log_id")).limit(n)
-
-    def run_summary(self, run_id: str | None = None) -> DataFrame:
-        df = self.read().filter(F.col("run_id") == (run_id or self.run_id))
-        return df.groupBy("layer", "status").agg(
-            F.count(F.lit(1)).alias("events"),
-            F.sum("rows_processed").alias("rows"),
-        )

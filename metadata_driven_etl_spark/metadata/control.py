@@ -71,6 +71,3 @@ class ControlTable(KeyedTable):
 
     def get_state(self, table_name: str, layer: str) -> Row | None:
         return self.get((table_name, layer))
-
-    def all_states(self):
-        return self.read().orderBy("layer", "table_name")

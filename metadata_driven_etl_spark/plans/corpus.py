@@ -55,13 +55,11 @@ same way DQ rules are.
 from __future__ import annotations
 
 import re
-import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.config.model import (
-    CorpusConfig,
     CorpusPipelineConfig,
     CorpusStageConfig,
 )
@@ -71,7 +69,6 @@ from metadata_driven_etl_spark.operators import decontam as decontam_ops
 from metadata_driven_etl_spark.operators import dedup as dedup_ops
 from metadata_driven_etl_spark.operators import text as text_ops
 from metadata_driven_etl_spark.plans.pipeline import (
-    PipelineContext,
     UnitResult,
     _counted_write,
     _LayerBase,
@@ -99,15 +96,19 @@ class CorpusLayer(_LayerBase):
         docs = self._load_input(p)
         df = docs
         stage_metrics: list[DQRuleMetrics] = []
+        rows_in = docs.count()
         for i, stage in enumerate(p.stages):
-            rows_in = df.count()
             df = _apply_stage(df, docs, stage, p.id_column, p.text_column)
-            # Materialize each stage boundary once: the count doubles as
-            # the survival metric AND truncates the growing plan so later
-            # stages (which may self-join, e.g. near_dedup) don't
-            # re-execute every earlier stage per subtree.
-            df = checkpoint(df, eager=True)
-            rows_out = df.count()
+            # Materialize each stage boundary once, in one job that also
+            # counts the survivors (the stage's rows out, the next stage's
+            # rows in) and truncates the growing plan so later stages
+            # (which may self-join, e.g. near_dedup) don't re-execute
+            # every earlier stage per subtree.
+            obs = Observation()
+            df = checkpoint(
+                df.observe(obs, F.count(F.lit(1)).alias("rows")), eager=True
+            )
+            rows_out = int(obs.get["rows"])
             stage_metrics.append(
                 DQRuleMetrics(
                     rule_name=f"{i}:{stage.stage}",
@@ -118,6 +119,7 @@ class CorpusLayer(_LayerBase):
                     invalid_count=rows_in - rows_out,
                 )
             )
+            rows_in = rows_out
         rows = _counted_write(
             df, lambda d: self.ctx.table_format.overwrite(d, p.target_table)
         )
@@ -438,11 +440,3 @@ def _semantic_dedup(
         ).select(F.col(f"kept_{id_col}").alias(id_col))
     dropped = clusters.select(id_col).join(kept, id_col, "left_anti")
     return df.join(dropped, id_col, "left_anti")
-
-
-def run_corpus_config(
-    ctx: PipelineContext, config: CorpusConfig, run_date: str | None = None
-) -> list[UnitResult]:
-    """Convenience entry: run every pipeline in ``config``."""
-    run_date = run_date or time.strftime("%Y-%m-%d")
-    return CorpusLayer(ctx, config).run(run_date)

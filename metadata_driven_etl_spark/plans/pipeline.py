@@ -39,7 +39,7 @@ from metadata_driven_etl_spark.config.model import (
     SourceConfig,
     unit_id,
 )
-from metadata_driven_etl_spark.dq.engine import DataQualityEngine, DQRejectError
+from metadata_driven_etl_spark.dq.engine import DataQualityEngine
 from metadata_driven_etl_spark.io.writer import TableFormat, checkpoint, owned
 from metadata_driven_etl_spark.metadata.audit import AuditLogger
 from metadata_driven_etl_spark.metadata.control import ControlTable
@@ -393,25 +393,18 @@ class SilverLayer(_LayerBase):
     def _transform(self, t: SilverTransform, run_date: str) -> int:
         df = self._sql(t.sql_query, run_date)
         df = self._enrich(df, t)
+        # a rejected batch raises here, before the table is touched; else
+        # result.df is the unit's checkpoint of the DQ output
         result = self.dq.apply(df, list(t.data_quality))
         self.ctx.dq_metrics.record(t.target_table, run_date, result.metrics)
 
-        incremental = "${PROCESSING_DATE}" in t.sql_query
-        if incremental and t.partition_by:
+        fmt, parts = self.ctx.table_format, list(t.partition_by)
+        if "${PROCESSING_DATE}" in t.sql_query and parts:
             # replace only the partitions this run produced (§2.14#7)
-            rows = _counted_write(
-                result.df,
-                lambda d: self.ctx.table_format.overwrite_partitions(
-                    d, t.target_table, list(t.partition_by)
-                ),
-            )
+            write = lambda d: fmt.overwrite_partitions(d, t.target_table, parts)  # noqa: E731
         else:
-            rows = _counted_write(
-                result.df,
-                lambda d: self.ctx.table_format.overwrite(
-                    d, t.target_table, list(t.partition_by) or None
-                ),
-            )
+            write = lambda d: fmt.overwrite(d, t.target_table, parts or None)  # noqa: E731
+        rows = _counted_write(result.df, write)
         self.ctx.control.update_run(
             t.target_table, self.layer_name, run_date, rows, "success",
             {"transform_id": t.transform_id},

@@ -28,7 +28,8 @@ to 1M rows. Delta targets use Delta's file-pruned native MERGE instead.
 
 Single-writer contract: while the query runs it owns its target. A
 write from anywhere else is not in the mirror and is overwritten by the
-next batch. A restarted query reloads the mirror from the table.
+next batch. The mirror is released when the query terminates (stopped,
+drained or failed); a restarted query reloads it from the table.
 Checkpointing makes the sink exactly-once per micro-batch id: on restart,
 a replayed batch re-merges the same rows idempotently (upsert is
 idempotent for deterministic aggregates).
@@ -39,8 +40,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQueryListener
 
-from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.io.writer import MirroredTable, TableFormat
 
 
 def refresh_owner_tables(owner, *tables: str) -> None:
@@ -58,6 +60,27 @@ def refresh_owner_tables(owner, *tables: str) -> None:
             owner.catalog.refreshTable(t)
         except Exception:
             pass
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Releases a query's mirror once the query run has terminated, and
+    deregisters itself. The event arrives asynchronously after the end."""
+
+    def __init__(self, streams, run_id: str, mirror: MirroredTable) -> None:
+        self.streams, self.run_id, self.mirror = streams, run_id, mirror
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    onQueryProgress = onQueryStarted
+
+    def onQueryTerminated(self, event) -> None:
+        if str(event.runId) == self.run_id:
+            self.release()
+
+    def release(self) -> None:  # a second call is harmless
+        self.streams.removeListener(self)
+        self.mirror.release()
 
 
 def merge_stream(
@@ -90,4 +113,13 @@ def merge_stream(
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    query = writer.start()
+    # the parquet merger is a MirroredTable's bound merge: its copy of the
+    # target outlives every batch, so the query's end releases it
+    mirror = getattr(merge_batch, "__self__", None)
+    if isinstance(mirror, MirroredTable):
+        listener = _ReleaseOnTermination(owner.streams, query.runId, mirror)
+        owner.streams.addListener(listener)
+        if not query.isActive:  # ended before the listener could hear it
+            listener.release()
+    return query

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -45,6 +47,28 @@ def persistent_rdds(spark):
         )
 
     return mark
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` runs its block under a fresh job
+    group, which threads started through ``inheritable_thread_target``
+    inherit, and clears the group when the block ends; ``jobs()`` returns
+    the number of Spark jobs run in the group so far."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counted():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted block")
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    return counted
 
 
 # hypothesis-compatible alias (function-scoped health check suppressed)

@@ -550,6 +550,53 @@ def test_pipeline_survives_empty_intermediate(ctx, tmp_path):
     assert ctx.spark.table("corpus.t_empty_v1").count() == 0
 
 
+def test_stage_counts_cost_one_job_per_boundary(ctx, tmp_path, spark_jobs):
+    """Each stage boundary's eager checkpoint also counts the stage's
+    survivors, and the next stage takes that count as its rows in: only
+    the input is counted on its own. This 3-stage pipeline of map-only
+    stages runs 10 Spark jobs: 3 to read and count the input, one
+    checkpoint per stage, the write and the DQ metrics, dictionary and
+    audit commits. A count before and after each checkpoint made it 20."""
+    cfg = load_corpus_config(
+        _write_config(
+            tmp_path,
+            f"""
+            corpus_pipelines:
+              - pipeline_id: counted_v1
+                input_path: "{SF_DOCS}"
+                target_table: corpus.t_counted_v1
+                stages:
+                  - stage: quality_filter
+                    min_tokens: 3
+                  - stage: repetition_filter
+                    max_dup_bigram_frac: 0.5
+                  - stage: split
+                    split_by: source
+                    splits:
+                      - {{name: train, weight: 0.9}}
+                      - {{name: test, weight: 0.1}}
+            """,
+        )
+    )
+    with spark_jobs() as jobs:
+        [result] = CorpusLayer(ctx, cfg).run("2026-08-13")
+    assert result.status == "success"
+    chain = sorted(
+        ctx.dq_metrics.history("corpus.t_counted_v1")
+        .filter(F.col("rule_type") == "corpus_stage")
+        .collect(),
+        key=lambda r: r.rule_name,
+    )
+    assert [r.rule_name for r in chain] == [
+        "0:quality_filter", "1:repetition_filter", "2:split",
+    ]
+    assert chain[0].total_count == ctx.spark.read.parquet(SF_DOCS).count()
+    for prev, cur in zip(chain, chain[1:]):
+        assert cur.total_count == prev.valid_count
+    assert chain[-1].valid_count == result.rows
+    assert jobs() <= 10
+
+
 def test_token_budget_stage(ctx, tmp_path):
     """The token_budget stage keeps the greedy best-by-quality prefix
     within the budget, schema-preserving."""

@@ -120,14 +120,6 @@ def test_multiple_rules_single_pass(dq, df):
     assert out.count() == 3  # filter rule applied
 
 
-def test_invalid_samples(spark, df):
-    dq = DataQualityEngine(spark, sample_invalid=10)
-    res = dq.apply(df, [_rule(rule_name="r", rule_type="not_null",
-                              column="email", action_on_failure="tag")])
-    assert len(res.invalid_samples["r"]) == 1
-    assert res.invalid_samples["r"][0].id == 2
-
-
 def test_zscore_outlier_rule(spark, dq):
     """zscore_outlier: far-out value and NULL are INVALID, bulk is VALID;
     partition invariant holds; filter drops exactly the outlier+null."""

@@ -3,11 +3,13 @@ file stream: the target equals the batch aggregate after every drain, each
 micro-batch stays within its Spark-job budget, an empty batch writes
 nothing, a partitioned target keeps its spec, a restart on the same
 checkpoint is exactly-once, a failed batch leaves the target intact, and
-the sink's cached state does not grow with the number of batches."""
+the sink's cached state does not grow with the number of batches and is
+released when the query ends."""
 
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.errors.exceptions.captured import StreamingQueryException
@@ -132,6 +134,28 @@ def test_merge_stream_drains_within_budget_and_restarts(
     # the mirror is read inside the batch's own checkpoint job
     assert len(jobs) <= JOBS_PER_BATCH, len(jobs)
     assert _rows(spark.table(target)) == expected()
+
+
+def test_finished_query_releases_its_mirror(
+    spark, tmp_path, target, persistent_rdds
+):
+    """The query's copy of the target is a local checkpoint held across
+    batches; once the query has terminated it is released. The release
+    follows an asynchronous listener event, so the check polls, for at
+    most 60 s."""
+    src = str(tmp_path / "in")
+    _drop(spark, src, _wave(0))
+    persistent = persistent_rdds()
+    query = merge_stream(
+        _aggregate(stream_from_files(spark, src, SCHEMA)), target, KEYS,
+        ParquetFormat(), str(tmp_path / "ckpt"),
+    )
+    assert query.awaitTermination(120)
+    assert _data_batches(query) == 1
+    deadline = time.monotonic() + 60
+    while persistent() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert persistent() == 0
 
 
 def test_failed_batch_leaves_target_intact(spark, tmp_path, target, monkeypatch):

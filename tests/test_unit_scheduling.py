@@ -2,8 +2,8 @@
 from threads that carry the caller's job group, a unit that reads or
 writes another unit's table waits for it, results keep config order.
 Also pins what a unit costs in Spark jobs and cached blocks: the silver
-unit's job count, and the delta model's snapshot checkpoint released
-after each run."""
+unit's job count, a rejected silver unit's target left as it was, and
+the delta model's snapshot checkpoint released after each run."""
 
 from __future__ import annotations
 
@@ -32,8 +32,6 @@ from metadata_driven_etl_spark.plans.pipeline import (
 )
 
 RUN_DATE = "2024-05-01"
-GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description",
-              "spark.job.interruptOnCancel")
 
 
 @pytest.fixture(scope="module")
@@ -66,12 +64,7 @@ def _model(mid, sql, **extra):
             "sql_query": sql, **extra}
 
 
-def _clear_job_group(sc):
-    for k in GROUP_KEYS:
-        sc.setLocalProperty(k, None)
-
-
-def test_independent_units_run_concurrently(spark, ctx):
+def test_independent_units_run_concurrently(spark, ctx, spark_jobs):
     """Three independent models meet at a three-party barrier, which only
     concurrent units can pass. Each unit runs in a pool thread that sees
     the caller's job group, and results come back in config order."""
@@ -90,15 +83,13 @@ def test_independent_units_run_concurrently(spark, ctx):
 
     cfg = _gold(*(_model(mid, f"SELECT {i} AS x")
                   for i, mid in enumerate(("m_c", "m_a", "m_b"))))
-    sc.setJobGroup("us-caller", "caller's group")
-    try:
+    with spark_jobs():
+        caller = sc.getLocalProperty("spark.jobGroup.id")
         results = Meeting(ctx, cfg).run(RUN_DATE)
-    finally:
-        _clear_job_group(sc)
     assert [(r.unit_id, r.status, r.rows) for r in results] == [
         ("m_c", "success", 1), ("m_a", "success", 1), ("m_b", "success", 1),
     ]
-    assert {g for g, _ in seen.values()} == {"us-caller"}
+    assert {g for g, _ in seen.values()} == {caller}
     assert len({t for _, t in seen.values()}) == 3
     assert threading.get_ident() not in {t for _, t in seen.values()}
 
@@ -209,12 +200,13 @@ def test_a_repeated_unit_id_is_rejected_at_load():
              "target_table": "c.docs", "stages": [{"stage": "quality_filter"}]})})
 
 
-def test_silver_unit_job_budget(spark, ctx):
-    """A silver unit whose four rules all fail on some rows runs 12 Spark
-    jobs: the DQ metrics pass (5 adaptive jobs), the write, which runs the
-    DQ plan again (6), and the control commit (1). No job collects
-    samples of the invalid rows, which nothing reads; with samples, each
-    failing rule ran the whole DQ plan once more (22 jobs here)."""
+def test_silver_unit_job_budget(spark, ctx, spark_jobs):
+    """A silver unit whose four rules all fail on some rows runs its DQ
+    plan once, in 8 Spark jobs: the DQ checkpoint, which computes the
+    output and every rule's count together (4 adaptive jobs), the DQ
+    metrics commit, the write, which reads the checkpoint, and the control
+    and audit commits. With the counts taken by a separate aggregate the
+    write ran the DQ plan again (12 jobs here)."""
     spark.createDataFrame(
         [(i, f"C{i % 3}" if i % 4 else None, i % 5) for i in range(40)],
         "id long, cust string, qty long",
@@ -237,19 +229,60 @@ def test_silver_unit_job_budget(spark, ctx):
              "ref_column": "cust", "action_on_failure": "tag"},
         ],
     }]})
-    sc = spark.sparkContext
-    jobs = []
-    for i in range(2):
-        group = f"us-silver-{i}"
-        sc.setJobGroup(group, "silver unit")
-        try:
+    counts = []
+    for _ in range(2):
+        with spark_jobs() as jobs:
             [result] = SilverLayer(ctx, cfg).run(RUN_DATE)
-        finally:
-            _clear_job_group(sc)
         assert (result.status, result.rows) == ("success", 32)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        counts.append(jobs())
     # the first run also creates the dictionary rows
-    assert jobs[1] <= 12, jobs
+    assert counts[1] <= 8, counts
+
+
+def test_rejected_silver_unit_leaves_its_target_as_it_was(
+    spark, ctx, persistent_rdds
+):
+    """A ``reject`` rule decides between the DQ checkpoint and the write:
+    a failing batch ends the unit before the write touches the table, so
+    the last good run's rows and files stay, no DQ metrics row is
+    recorded, and the unit's checkpoint is released."""
+    import os
+
+    table = "us_silver.gated"
+    cfg = PipelineConfig.from_dict({"transformations": [{
+        "transform_id": "gated", "target_table": table,
+        "sql_query": "SELECT id, qty FROM us_silver.gate_src",
+        "data_quality": [
+            {"rule_name": "qty_pos", "rule_type": "expression",
+             "expression": "qty > 0", "action_on_failure": "reject"},
+            {"rule_name": "id_present", "rule_type": "not_null",
+             "column": "id", "action_on_failure": "tag"},
+        ],
+    }]})
+
+    def load(rows):
+        spark.createDataFrame(rows, "id long, qty long").write.mode(
+            "overwrite"
+        ).saveAsTable("us_silver.gate_src")
+
+    def state():
+        spark.catalog.refreshTable(table)
+        files = {(f, os.stat(f.removeprefix("file:")).st_mtime_ns)
+                 for f in spark.table(table).inputFiles()}
+        rows = sorted(tuple(r) for r in spark.table(table).collect())
+        return files, rows, ctx.dq_metrics.history(table).count()
+
+    load([(i, i + 1) for i in range(10)])
+    [good] = SilverLayer(ctx, cfg).run(RUN_DATE)
+    assert (good.status, good.rows) == ("success", 10)
+    before = state()
+
+    load([(i, i - 3) for i in range(10)])
+    persistent = persistent_rdds()
+    [bad] = SilverLayer(ctx, cfg).run(RUN_DATE)
+    assert bad.status == "error" and "qty_pos" in bad.error
+    assert persistent() == 0
+    assert state() == before
 
 
 def test_delta_model_releases_its_snapshot_checkpoint(
