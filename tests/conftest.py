@@ -7,7 +7,7 @@ from contextlib import contextmanager
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from metadata_driven_etl_spark.session import get_local_spark
 

@@ -15,14 +15,18 @@ import os
 import sys
 import textwrap
 from concurrent.futures import ThreadPoolExecutor
-from datetime import date
+from datetime import date, datetime
 
 import pytest
 
+import metadata_driven_etl_spark.metadata.audit as audit_module
+import metadata_driven_etl_spark.metadata.control as control_module
+import metadata_driven_etl_spark.metadata.metrics as metrics_module
 from metadata_driven_etl_spark.config.model import PipelineConfig
+from metadata_driven_etl_spark.dq.engine import DQRuleMetrics
 from metadata_driven_etl_spark.io.writer import ParquetFormat
 from metadata_driven_etl_spark.metadata.audit import AuditLogger
-from metadata_driven_etl_spark.metadata.control import ControlTable
+from metadata_driven_etl_spark.metadata.control import CONTROL_SCHEMA, ControlTable
 from metadata_driven_etl_spark.metadata.metrics import (
     DataDictionary,
     DQMetricsStore,
@@ -399,6 +403,176 @@ def test_concurrent_commits_lose_no_update(spark):
     assert got == want
     assert {k: control.get_state(*k)["records_processed"] for k in want} == want
     assert spark.table("metadata.mp_stress_audit").count() == 8 * 50
+
+
+def _table_dir(spark, table):
+    db, name = table.split(".")
+    return os.path.join(
+        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"),
+        f"{db}.db", name,
+    )
+
+
+class _Crashing:
+    """A Hadoop ``FileSystem`` whose method ``name`` raises, standing in
+    for a driver that dies at that step of a commit."""
+
+    def __init__(self, fs, name):
+        self._fs, self._name = fs, name
+
+    def __getattr__(self, attr):
+        if attr != self._name:
+            return getattr(self._fs, attr)
+
+        def crash(*_args):
+            raise OSError(f"crash in {attr}")
+
+        return crash
+
+
+def test_metadata_commits_and_loads_start_no_spark_job(spark, spark_jobs):
+    """Every commit is a driver-written file and every store loads from
+    files on the driver: commits and construction over an existing table
+    start no Spark job."""
+    fmt = ParquetFormat()
+    tables = {name: f"metadata.mp_nojob_{name}"
+              for name in ("control", "audit", "dq", "dict")}
+
+    def stores():
+        return (
+            ControlTable(spark, fmt, table=tables["control"]),
+            AuditLogger(spark, fmt, table=tables["audit"]),
+            DQMetricsStore(spark, fmt, table=tables["dq"]),
+            DataDictionary(spark, fmt, table=tables["dict"]),
+        )
+
+    control, audit, dq, dictionary = stores()
+    control.update_run("t", "bronze", "2024-05-01", 1, "success")
+    dictionary.register("t", spark.range(1))
+    with spark_jobs() as jobs:
+        control.update_run("t", "bronze", "2024-05-02", 2, "success")
+        audit.log_start("bronze", "process", "u")
+        audit.flush()
+        dq.record("t", "2024-05-02", [
+            DQRuleMetrics("r", "expression", "filter", 10, 9, 1),
+        ])
+        dictionary.register("t", spark.range(1).selectExpr("id", "'x' AS tag"))
+        stores()
+        assert jobs() == 0
+    assert [tuple(r)[:4] for r in spark.table(tables["control"]).collect()] == [
+        ("t", "bronze", "2024-05-02", 2),
+    ]
+    assert spark.table(tables["audit"]).count() == 1
+    assert [r.invalid_count for r in spark.table(tables["dq"]).collect()] == [1]
+    assert sorted(
+        r.column_name for r in spark.table(tables["dict"]).collect()
+    ) == ["id", "tag"]
+
+
+def test_keyed_commit_cut_before_cleanup_leaves_new_state(spark):
+    """A crash between the rename and the delete of the older file leaves
+    both files: the table stays readable, a new store's mirror is the new
+    state (newest file wins), and the next commit leaves each key once."""
+    fmt = ParquetFormat()
+    table = "metadata.mp_crash_cleanup"
+    control = ControlTable(spark, fmt, table=table)
+    control.update_run("t1", "bronze", "2024-06-01", 1, "success")
+    control.update_run("t2", "bronze", "2024-06-01", 2, "success")
+    control._fs = _Crashing(control._fs, "delete")
+    with pytest.raises(OSError, match="crash in delete"):
+        control.update_run("t1", "bronze", "2024-06-02", 10, "success")
+    assert len(_data_files(_table_dir(spark, table))) == 2
+    assert spark.table(table).count() == 4
+
+    after = ControlTable(spark, fmt, table=table)
+    assert {
+        t: after.get_state(t, "bronze")["records_processed"] for t in ("t1", "t2")
+    } == {"t1": 10, "t2": 2}
+    assert after.get_last_run_date("t1", "bronze") == "2024-06-02"
+    after.update_run("t3", "bronze", "2024-06-02", 3, "success")
+    assert sorted(
+        (r.table_name, r.records_processed)
+        for r in spark.table(table).collect()
+    ) == [("t1", 10), ("t2", 2), ("t3", 3)]
+    assert len(_data_files(_table_dir(spark, table))) == 1
+
+
+def test_leftover_temp_file_is_read_by_nobody(spark):
+    """A crash before the rename leaves the hidden temp file: neither
+    Spark nor a new store's mirror reads it."""
+    fmt = ParquetFormat()
+    table = "metadata.mp_crash_rename"
+    control = ControlTable(spark, fmt, table=table)
+    control.update_run("t1", "bronze", "2024-06-01", 1, "success")
+    control._fs = _Crashing(control._fs, "rename")
+    with pytest.raises(OSError, match="crash in rename"):
+        control.update_run("ghost", "bronze", "2024-06-02", 9, "success")
+    names = os.listdir(_table_dir(spark, table))
+    assert any(n.startswith(".") and n.endswith(".tmp") for n in names), names
+
+    spark.catalog.refreshTable(table)
+    assert [r.table_name for r in spark.table(table).collect()] == ["t1"]
+    after = ControlTable(spark, fmt, table=table)
+    assert after.get_state("ghost", "bronze") is None
+    assert after.get_state("t1", "bronze")["records_processed"] == 1
+
+
+def test_saveastable_files_load_and_count_as_oldest(spark):
+    """A table ``saveAsTable`` wrote (Spark's own timestamp encoding)
+    loads into the mirror as ``spark.table`` reads it, and the first
+    commit replaces its file."""
+    fmt = ParquetFormat()
+    table = "metadata.mp_saveastable"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    stamp = datetime(2024, 6, 1, 12, 30, 45, 123456)
+    spark.createDataFrame(
+        [("t1", "bronze", "2024-06-01", 1, "success", "{}", stamp),
+         ("t2", "bronze", "2024-06-01", 2, "failed", "{}", stamp)],
+        CONTROL_SCHEMA,
+    ).coalesce(1).write.mode("overwrite").saveAsTable(table)
+    control = ControlTable(spark, fmt, table=table)
+    for row in spark.table(table).collect():
+        assert control.get_state(row.table_name, row.layer) == row
+    control.update_run("t2", "bronze", "2024-06-02", 5, "success")
+    assert sorted(
+        (r.table_name, r.records_processed, r.updated_timestamp == stamp)
+        for r in spark.table(table).collect()
+    ) == [("t1", 1, True), ("t2", 5, False)]
+    [name] = _data_files(_table_dir(spark, table))
+    assert os.path.basename(name).startswith("commit-")
+
+
+@pytest.mark.parametrize("stamp", [
+    datetime(2024, 3, 10, 1, 2, 3, 456789),
+    datetime(1969, 12, 31, 23, 59, 59, 999999),
+])
+def test_timestamps_round_trip_through_a_commit(spark, monkeypatch, stamp):
+    """A committed ``TimestampType`` value reads back, through
+    ``spark.table`` and through a new mirror, exactly as a frame built by
+    ``createDataFrame`` returns it."""
+    for module in (control_module, audit_module, metrics_module):
+        monkeypatch.setattr(module, "utc_now", lambda: stamp)
+    want = spark.createDataFrame([(stamp,)], "ts timestamp").collect()[0].ts
+    assert want == stamp
+    fmt = ParquetFormat()
+    suffix = stamp.year
+    tables = [f"metadata.mp_ts_{name}_{suffix}" for name in ("control", "audit", "dq")]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    control = ControlTable(spark, fmt, table=tables[0])
+    control.update_run("t", "bronze", "2024-03-10", 1, "success")
+    audit = AuditLogger(spark, fmt, table=tables[1])
+    audit.log_start("bronze", "process", "u")
+    audit.flush()
+    DQMetricsStore(spark, fmt, table=tables[2]).record(
+        "t", "2024-03-10", [DQRuleMetrics("r", "not_null", "tag", 1, 1, 0)]
+    )
+    assert [
+        [r[col] for r in spark.table(t).collect()]
+        for t, col in zip(tables, ("updated_timestamp", "timestamp", "measured_at"))
+    ] == [[want]] * 3
+    mirror = ControlTable(spark, fmt, table=tables[0]).get_state("t", "bronze")
+    assert mirror.updated_timestamp == want
 
 
 def test_dictionary_tracks_added_and_retyped_columns(spark, runs):

@@ -202,11 +202,12 @@ def test_a_repeated_unit_id_is_rejected_at_load():
 
 def test_silver_unit_job_budget(spark, ctx, spark_jobs):
     """A silver unit whose four rules all fail on some rows runs its DQ
-    plan once, in 8 Spark jobs: the DQ checkpoint, which computes the
-    output and every rule's count together (4 adaptive jobs), the DQ
-    metrics commit, the write, which reads the checkpoint, and the control
-    and audit commits. With the counts taken by a separate aggregate the
-    write ran the DQ plan again (12 jobs here)."""
+    plan once, in 5 Spark jobs: the DQ checkpoint, which computes the
+    output and every rule's count together (4 adaptive jobs), and the
+    write, which reads the checkpoint. The DQ metrics, control and audit
+    commits are driver-written files and start no job; as ``saveAsTable``
+    writes they cost one job each (8 jobs here), and with the counts taken
+    by a separate aggregate the write ran the DQ plan again (12)."""
     spark.createDataFrame(
         [(i, f"C{i % 3}" if i % 4 else None, i % 5) for i in range(40)],
         "id long, cust string, qty long",
@@ -236,7 +237,7 @@ def test_silver_unit_job_budget(spark, ctx, spark_jobs):
         assert (result.status, result.rows) == ("success", 32)
         counts.append(jobs())
     # the first run also creates the dictionary rows
-    assert counts[1] <= 8, counts
+    assert counts[1] <= 5, counts
 
 
 def test_rejected_silver_unit_leaves_its_target_as_it_was(
