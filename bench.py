@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from metadata_driven_etl_spark.session import get_local_spark  # noqa: E402
+from metadata_driven_etl_spark.session import get_local_spark, local_cpus  # noqa: E402
 from metadata_driven_etl_spark import workloads  # noqa: E402
 
 HISTORY_PATH = os.path.join(
@@ -685,7 +685,7 @@ def main() -> None:
     # landed in history stamped with the host's core count. The
     # contended/quiet-host checks above still use os.cpu_count() — they
     # gauge HOST load, not session width.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
+    cpus = local_cpus()
     # a run that STARTED on a contended host (1-min load >= cpus/4) is
     # flagged in its own record and never written to the local history,
     # so it can neither pollute best-times nor ship silently — the judge

@@ -56,6 +56,18 @@ _DEFAULT_CONF: dict[str, str] = {
     # diverges from the DuckDB oracle's plain-TIMESTAMP comparisons. With a
     # UTC session the LTZ reading has identical wall-clock values.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Whole-stage codegen cache, an LRU of compiled classes keyed by their
+    # source. A repeated medallion pipeline run walks 105-120 classes in the
+    # same order each time; at Spark's default of 100 entries nearly every
+    # lookup missed, so each run recompiled them all with Janino and
+    # re-warmed the JIT. 1000 holds that working set with headroom. An
+    # entry holds its class in Metaspace (about twice its bytecode) and its
+    # Java source, the cache key, on the heap: about 11 KB for the
+    # medallion's mean class and 50 KB for its largest, so the cap bounds
+    # the cache at about 11-50 MB. Static conf: it takes effect only in a
+    # session this function builds; a session built elsewhere keeps
+    # Spark's default (SCALE.md §4).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -80,7 +92,16 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_cpus() -> int:
+    """Cores for a local session: ``SPARK_GRAFT_CPUS`` when it holds a
+    positive integer, else the host's core count."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        n = 0
+    return n if n > 0 else os.cpu_count() or 8
+
+
 def get_local_spark(cpus: int | None = None, **kwargs) -> SparkSession:
     """Local-mode session used by tests and bench.py."""
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    return get_spark(master=f"local[{n}]", **kwargs)
+    return get_spark(master=f"local[{cpus or local_cpus()}]", **kwargs)
