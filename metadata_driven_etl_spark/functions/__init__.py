@@ -56,21 +56,6 @@ def sql_davg(expr: str) -> str:
     return f"{sql_dsum(expr)} / COUNT({expr})"
 
 
-def row_fingerprint(*cols: Column | str) -> Column:
-    """Deterministic row fingerprint via md5 over a canonical concat.
-
-    md5 is identical in Spark and DuckDB, unlike xxhash64/hash which are
-    engine-specific — so fingerprints are oracle-checkable.
-    """
-    parts = [F.coalesce(_c(c).cast("string"), F.lit("\x00null")) for c in cols]
-    return F.md5(F.concat_ws("\x1f", *parts))
-
-
-def sql_row_fingerprint(*exprs: str) -> str:
-    parts = ", ".join(f"COALESCE(CAST({e} AS VARCHAR), chr(0) || 'null')" for e in exprs)
-    return f"md5(concat_ws(chr(31), {parts}))"
-
-
 def isum(col: Column | str) -> Column:
     """SUM for INTEGER-VALUED double columns: plain double summation.
 

@@ -50,21 +50,6 @@ def daily_sales_summary(
     )
 
 
-def conditional_counts(df: DataFrame, conditions: Mapping[str, Column]) -> DataFrame:
-    """ONE-pass multi-predicate counting: {name: condition} → single row.
-
-    Replaces the reference's per-rule ``df.filter(...).count()`` re-scans
-    (dq_engine.py:38-39,81-83,121-123 — O(rules × full scans)) with a single
-    aggregation: ``count(*)`` + ``sum(when(cond,1))`` per rule.
-    """
-    aggs = [F.count(F.lit(1)).alias("total_count")]
-    for name, cond in conditions.items():
-        aggs.append(
-            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(name)
-        )
-    return df.agg(*aggs)
-
-
 def distinct_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Distinct key projection (reference dq_engine.py:163)."""
     return df.select(*cols).distinct()

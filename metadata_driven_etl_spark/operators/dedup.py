@@ -54,11 +54,6 @@ def sql_exact_dedup_stats(table: str = "documents", text_col: str = "text", id_c
     """
 
 
-def exact_dedup(df: DataFrame, subset: list[str]) -> DataFrame:
-    """Plain exact dedup on a column subset (hash group-by under the hood)."""
-    return df.dropDuplicates(subset)
-
-
 # --- word shingles ----------------------------------------------------------
 
 

@@ -186,7 +186,7 @@ def split_by_group(
     if split_col in df.columns:
         # withColumn would silently REPLACE it: a corpus that already
         # carries a split assignment would be re-split with no error
-        # (ADVICE r5) — same reserved-column discipline as z_value.
+        # (ADVICE r5).
         raise ValueError(
             f"split_by_group: input already has a {split_col!r} column — "
             "drop/rename it first, or pass a different split_col"

@@ -25,10 +25,6 @@ def read_file_source(
     return reader.format(fmt).load(src.source_path)
 
 
-def read_table_source(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def read_binary_media(
     spark: SparkSession,
     path: str,

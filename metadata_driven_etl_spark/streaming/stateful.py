@@ -1,28 +1,51 @@
-"""Custom stateful streaming operator: applyInPandasWithState sessionization.
+"""Custom stateful streaming operators (``applyInPandasWithState``).
 
 The built-in ``F.session_window`` (streaming/windows.py) covers gap sessions
 declaratively; this module is the *custom* stateful path the engine offers
-when session semantics go beyond what the built-in expresses (per-session
-aggregates, custom close conditions, emit-on-close) — the pattern a user
-would extend for arbitrary per-key state machines at 100 TB stream scale.
+when per-key state goes beyond what the built-ins express (per-session
+aggregates, custom close conditions, emit-on-close, order-sensitive folds)
+— the pattern a user would extend for arbitrary per-key state machines at
+100 TB stream scale. State is a scalar-typed tuple per key (epoch micros as
+longs, lists as JSON strings), so it round-trips through Arrow losslessly.
 
-Semantics: per user, events extend an open session while the gap between
-consecutive events is ≤ ``gap_seconds``; a larger gap closes the session
-(emitted immediately) and opens a new one. An open session is closed and
-emitted when the event-time watermark passes its end + gap (event-time
-timeout) — so state is bounded by the watermark, never unbounded.
+The operators differ in how the order of arrival may move the answer —
+three ordering contracts:
 
-Scale notes: state is one small tuple per open session per user — O(active
-users); the watermark timeout guarantees eviction. Shuffle is one hash
-partitioning on the user key. The same function body works for batch
-backfill via operators.windows.sessionize (property-tested equivalent).
+- **Event time.** Disorder is repaired by the event-time watermark, which
+  also bounds state: a key's state is evicted or flushed by an event-time
+  timeout, never kept unbounded. Rows later than the watermark are dropped
+  (Structured Streaming's late-data contract).
+  - ``cusum_stateful``, ``rolling_zscore_stateful``, ``drawdown_stateful``
+    and ``gap_record_stateful`` are EXACT: their folds are order-sensitive,
+    so rows wait in a per-key pending buffer until the watermark passes
+    them and fold in (ts, event_id) order. One factory,
+    :func:`_event_time_fold`, holds that machinery; each twin supplies its
+    registers and per-row step.
+  - ``sessionize_stateful`` is tolerant: per user, an event extends the
+    open session while it lands within ``gap_seconds`` of it (interval
+    merge, so in-reach disorder is absorbed on arrival); a larger gap
+    closes the session (emitted immediately) and opens a new one; the
+    watermark passing end + gap closes and emits the open one.
+- **Arrival order** (``lateness_monitor_stateful``): the disorder IS the
+  statistic, so rows fold in micro-batch order with no pending buffer.
+- **Order-free** (``active_days_monitor_stateful``): a set union, which no
+  ordering can change.
+
+Scale notes: per-key state is O(1) registers plus, for the event-time
+operators, a buffer bounded by the watermark horizon. Shuffle is one hash
+partitioning on the key. The sessionizer's batch backfill is
+operators.windows.sessionize (property-tested equivalent); every twin's
+batch ≡ stream parity is pinned in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
 
 SESSION_OUTPUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
@@ -133,11 +156,88 @@ def sessionize_stateful(
     )
 
 
+def _event_time_fold(registers, step, value_col, alert_col):
+    """The per-key ``track`` function of an exact event-time fold.
+
+    State is the registers, in state-schema order, then ``pending``: the
+    rows newer than the watermark, as a JSON list of ``[ts_us, event_id]``
+    plus the ``value_col`` value when one is given. ``registers`` holds the
+    initial values; a list register rides in state as a JSON string.
+
+    Each call drops the rows whose event time is at or before the
+    watermark, adds the rest to ``pending``, and folds the pending rows the
+    watermark has passed in (ts, event_id) order: ``step(regs, row)``
+    updates the mutable register list and returns an alert value or None.
+    An event-time timeout at the newest pending row folds the rest once the
+    watermark passes it, so a key whose batches stop is still flushed.
+    Every alert is one output row ``(key, event_id, alert_col)``.
+
+    ``track`` and every ``step`` are closures that import what they need
+    inside themselves and reference no module-level name: cloudpickle then
+    ships them by value, so executors need not import this package. A
+    module-level helper called from either would be pickled by reference
+    (tests/test_stateful_fold.py checks this)."""
+    is_json = [isinstance(r, list) for r in registers]
+    initial = [json.dumps(r) if j else r for r, j in zip(registers, is_json)]
+    initial.append("[]")
+
+    def track(key, pdfs, state):
+        import json
+
+        import pandas as pd
+
+        *saved, pend_json = state.get if state.exists else initial
+        regs = [json.loads(v) if j else int(v) for v, j in zip(saved, is_json)]
+        pending = json.loads(pend_json)
+
+        if state.hasTimedOut:
+            # the watermark passed every pending row: fold them all
+            ready, pending = pending, []
+        else:
+            wm_ms = state.getCurrentWatermarkMs()
+            for pdf in pdfs:
+                unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
+                cols = [
+                    pdf["ts"].astype("int64").tolist(),
+                    pdf["event_id"].tolist(),
+                ]
+                if value_col:
+                    cols.append(pdf[value_col].tolist())
+                for t_raw, *rest in zip(*cols):
+                    t_us = int(t_raw) // unit_div
+                    # a row at or before the watermark is late: dropped
+                    if t_us // 1000 > wm_ms:
+                        pending.append([t_us, *map(int, rest)])
+            ready = [r for r in pending if r[0] // 1000 <= wm_ms]
+            pending = [r for r in pending if r[0] // 1000 > wm_ms]
+
+        alerts = []
+        for row in sorted(ready):
+            alert = step(regs, row)
+            if alert is not None:
+                alerts.append((row[1], alert))
+        state.update(
+            tuple(json.dumps(v) if j else v for v, j in zip(regs, is_json))
+            + (json.dumps(pending),)
+        )
+        if pending:
+            # flush via timeout once the watermark passes the newest row
+            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
+        if alerts:
+            yield pd.DataFrame(
+                {
+                    "event_type": [key[0]] * len(alerts),
+                    "event_id": [a[0] for a in alerts],
+                    alert_col: [a[1] for a in alerts],
+                }
+            )
+
+    return track
+
+
 CUSUM_OUTPUT_SCHEMA = "event_type string, event_id long, cusum_cents long"
-# fold carries the clamp-identity registers (exact bigints); the pending
-# buffer (rows newer than the watermark, not yet safe to fold) rides as a
-# JSON string — arrays of (ts_us, event_id, delta) — so the state schema
-# stays scalar-typed for the Arrow round-trip
+# the clamp-identity registers (exact bigints), then the pending buffer
+# (_event_time_fold)
 CUSUM_STATE_SCHEMA = "psum long, minp long, pending string"
 
 
@@ -156,19 +256,10 @@ def cusum_stateful(
     EXACT event-time semantics: S_t = max(0, S_{t-1} + (x_t − K)) folded
     strictly in (event time, id) order, alerts where S_t > H.
 
-    The CUSUM fold is order-sensitive, so unlike the sessionizer's
-    interval merge, correctness needs rows folded in final order: rows
-    newer than the watermark wait in a per-key PENDING buffer; once the
-    event-time watermark passes a row it is finalized — sorted into
-    (ts, id) order and folded through the clamp-identity registers
-    (psum, min-prefix), both exact bigints, emitting its alert if
-    S > H. Rows arriving later than the watermark are dropped (the
-    standard late-data contract of every built-in stateful op).
-
-    State per key: two longs + the pending buffer (bounded by the
-    watermark horizon); an event-time timeout at the newest pending row
-    flushes keys that stop receiving batches. Batch ≡ stream parity is
-    property-tested in tests/test_streaming.py.
+    The fold runs through the clamp-identity registers (psum,
+    min-prefix), both exact bigints: S = psum − min-prefix. Ordering,
+    late data and the pending buffer follow :func:`_event_time_fold`.
+    State per key: two longs + the watermark-bounded pending buffer.
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -179,83 +270,19 @@ def cusum_stateful(
             - F.lit(k_cents).cast("long")
         ).alias("delta"),
     )
-
     h = int(h_cents)
 
-    def track(key, pdfs, state):
-        import json
-
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                psum, minp, pend_json = state.get
-                return int(psum), int(minp), json.loads(pend_json)
-            return 0, 0, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "cusum_cents": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(psum, minp, ready):
-            # fold in final (ts, id) order; exact integer registers
-            alerts = []
-            for t_us, eid, d in sorted(ready):
-                psum += int(d)
-                if psum < minp:
-                    minp = psum
-                s = psum - minp
-                if s > h:
-                    alerts.append((t_us, eid, s))
-            return psum, minp, alerts
-
-        psum, minp, pending = load()
-
-        if state.hasTimedOut:
-            # the watermark passed every pending row: finalize all
-            psum, minp, alerts = finalize(psum, minp, pending)
-            state.update((psum, minp, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, d in zip(
-                ts_ns.tolist(),
-                pdf["event_id"].tolist(),
-                pdf["delta"].tolist(),
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(d)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        psum, minp, alerts = finalize(psum, minp, ready)
-        state.update((psum, minp, json.dumps(pending)))
-        if pending:
-            # flush via timeout once the watermark passes the newest row
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
+    def step(regs, row):
+        regs[0] += row[2]
+        regs[1] = min(regs[1], regs[0])
+        s = regs[0] - regs[1]
+        return s if s > h else None
 
     return (
         pre.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            track,
+            _event_time_fold((0, 0), step, "delta", "cusum_cents"),
             CUSUM_OUTPUT_SCHEMA,
             CUSUM_STATE_SCHEMA,
             "append",
@@ -265,10 +292,8 @@ def cusum_stateful(
 
 
 ZSCORE_OUTPUT_SCHEMA = "event_type string, event_id long, zscore double"
-# exact integer moment registers for the trailing window, plus the
-# current window contents and the pending (post-watermark) buffer as
-# JSON strings — scalar-typed state for the Arrow round-trip (the CUSUM
-# twin's representation)
+# exact integer moment registers for the trailing window and the window
+# contents, then the pending buffer (_event_time_fold)
 ZSCORE_STATE_SCHEMA = "s long, s2 long, win string, pending string"
 
 
@@ -296,13 +321,9 @@ def rolling_zscore_stateful(
     emitted double is bit-identical to the batch window form
     (stream ≡ batch pinned in tests/test_streaming.py).
 
-    Ordering discipline (the CUSUM twin's): rows newer than the
-    watermark wait in a per-key PENDING buffer; once the watermark
-    passes a row it is finalized in (ts, id) order through the window
-    registers. Late-beyond-watermark rows drop (the built-in stateful
-    ops' contract). State per key: two int64 moments + ≤win_rows window
-    values + the watermark-bounded pending buffer; an event-time
-    timeout flushes keys that stop receiving batches.
+    Ordering, late data and the pending buffer follow
+    :func:`_event_time_fold`. State per key: two int64 moments +
+    ≤win_rows window values + the watermark-bounded pending buffer.
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -312,87 +333,32 @@ def rolling_zscore_stateful(
     )
     w, thresh = int(win_rows), int(z_thresh)
 
-    def track(key, pdfs, state):
-        import json
+    def step(regs, row):
         import math
 
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                s, s2, win_json, pend_json = state.get
-                return (
-                    int(s), int(s2),
-                    json.loads(win_json), json.loads(pend_json),
-                )
-            return 0, 0, [], []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[0] for r in rows],
-                    "zscore": [r[1] for r in rows],
-                }
-            )
-
-        def finalize(s, s2, win, ready):
-            alerts = []
-            for t_us, eid, x in sorted(ready):
-                x = int(x)
-                win.append(x)
-                s += x
-                s2 += x * x
-                if len(win) > w:
-                    old = win.pop(0)
-                    s -= old
-                    s2 -= old * old
-                n = len(win)
-                var_num = n * s2 - s * s
-                if var_num > 0:
-                    z = float(n * x - s) / math.sqrt(float(var_num))
-                    if z > thresh or z < -thresh:
-                        alerts.append((eid, z))
-            return s, s2, win, alerts
-
-        s, s2, win, pending = load()
-
-        if state.hasTimedOut:
-            s, s2, win, alerts = finalize(s, s2, win, pending)
-            state.update((s, s2, json.dumps(win), json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, x in zip(
-                ts_ns.tolist(), pdf["event_id"].tolist(), pdf["x"].tolist()
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(x)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        s, s2, win, alerts = finalize(s, s2, win, ready)
-        state.update((s, s2, json.dumps(win), json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
+        s, s2, win = regs
+        x = row[2]
+        win.append(x)
+        s += x
+        s2 += x * x
+        if len(win) > w:
+            old = win.pop(0)
+            s -= old
+            s2 -= old * old
+        regs[0], regs[1] = s, s2
+        n = len(win)
+        var_num = n * s2 - s * s
+        if var_num > 0:
+            z = float(n * x - s) / math.sqrt(float(var_num))
+            if z > thresh or z < -thresh:
+                return z
+        return None
 
     return (
         pre.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            track,
+            _event_time_fold((0, 0, []), step, "x", "zscore"),
             ZSCORE_OUTPUT_SCHEMA,
             ZSCORE_STATE_SCHEMA,
             "append",
@@ -405,8 +371,7 @@ DRAWDOWN_OUTPUT_SCHEMA = (
     "event_type string, event_id long, drawdown_cents long"
 )
 # three exact integer registers (cumulative cents, running peak, max
-# drawdown so far) + the pending post-watermark buffer as JSON — the
-# CUSUM twin's scalar-typed state representation
+# drawdown so far), then the pending buffer (_event_time_fold)
 DRAWDOWN_STATE_SCHEMA = "cum long, peak long, maxdd long, pending string"
 
 
@@ -431,14 +396,9 @@ def drawdown_stateful(
     stream never draws down raw, exactly as an always-up equity curve
     never does; the CUSUM K-drift discipline).
 
-    Same order-sensitivity contract as the CUSUM twin: rows newer than
-    the watermark wait in a per-key pending buffer; the event-time
-    watermark finalizes them in (ts, id) order through the three
-    exact-bigint registers; rows later than the watermark are dropped.
-    State per key: three longs + the bounded pending buffer; the
-    event-time timeout at the newest pending row flushes keys whose
-    batches stop. Batch ≡ stream parity is property-tested in
-    tests/test_streaming.py.
+    Ordering, late data and the pending buffer follow
+    :func:`_event_time_fold`. State per key: three longs + the
+    watermark-bounded pending buffer.
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -450,78 +410,20 @@ def drawdown_stateful(
         ).alias("cents"),
     )
 
-    def track(key, pdfs, state):
-        import json
-
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                cum, peak, maxdd, pend_json = state.get
-                return int(cum), int(peak), int(maxdd), json.loads(pend_json)
-            return 0, 0, 0, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "drawdown_cents": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(cum, peak, maxdd, ready):
-            alerts = []
-            for t_us, eid, cents in sorted(ready):
-                cum += int(cents)
-                if cum > peak:
-                    peak = cum
-                dd = peak - cum
-                if dd > maxdd:
-                    maxdd = dd
-                    alerts.append((t_us, eid, dd))
-            return cum, peak, maxdd, alerts
-
-        cum, peak, maxdd, pending = load()
-
-        if state.hasTimedOut:
-            cum, peak, maxdd, alerts = finalize(cum, peak, maxdd, pending)
-            state.update((cum, peak, maxdd, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, cents in zip(
-                ts_ns.tolist(),
-                pdf["event_id"].tolist(),
-                pdf["cents"].tolist(),
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(cents)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        cum, peak, maxdd, alerts = finalize(cum, peak, maxdd, ready)
-        state.update((cum, peak, maxdd, json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
+    def step(regs, row):
+        regs[0] += row[2]
+        regs[1] = max(regs[1], regs[0])
+        dd = regs[1] - regs[0]
+        if dd > regs[2]:
+            regs[2] = dd
+            return dd
+        return None
 
     return (
         pre.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            track,
+            _event_time_fold((0, 0, 0), step, "cents", "drawdown_cents"),
             DRAWDOWN_OUTPUT_SCHEMA,
             DRAWDOWN_STATE_SCHEMA,
             "append",
@@ -551,13 +453,10 @@ def gap_record_stateful(
     detector ("we have never been this quiet") a fixed staleness
     threshold approximates badly.
 
-    Same order-sensitivity contract as the CUSUM/z-score/drawdown
-    twins: rows newer than the watermark wait in a per-key pending
-    buffer; the event-time watermark finalizes them in (ts, id) order
-    through the two exact-bigint registers; rows later than the
-    watermark are dropped. State per key: two longs + the bounded
-    pending buffer. Batch ≡ stream parity is property-tested in
-    tests/test_streaming.py.
+    Ordering, late data and the pending buffer follow
+    :func:`_event_time_fold`. State per key: two longs (-1 until the
+    first event and the first gap) + the watermark-bounded pending
+    buffer.
     """
     pre = events.where(F.col(user_col).isNotNull()).select(
         F.col(type_col).alias("event_type"),
@@ -565,75 +464,19 @@ def gap_record_stateful(
         F.col(order_col).alias("event_id"),
     )
 
-    def track(key, pdfs, state):
-        import json
-
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                last_us, max_gap, pend_json = state.get
-                return int(last_us), int(max_gap), json.loads(pend_json)
-            return -1, -1, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "gap_us": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(last_us, max_gap, ready):
-            alerts = []
-            for t_us, eid in sorted(ready):
-                if last_us >= 0:
-                    gap = t_us - last_us
-                    if gap > max_gap:
-                        alerts.append((t_us, eid, gap))
-                        max_gap = gap
-                last_us = t_us
-            return last_us, max_gap, alerts
-
-        last_us, max_gap, pending = load()
-
-        if state.hasTimedOut:
-            last_us, max_gap, alerts = finalize(last_us, max_gap, pending)
-            state.update((last_us, max_gap, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid in zip(
-                ts_ns.tolist(), pdf["event_id"].tolist()
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        last_us, max_gap, alerts = finalize(last_us, max_gap, ready)
-        state.update((last_us, max_gap, json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
+    def step(regs, row):
+        last_us, max_gap = regs
+        regs[0] = row[0]
+        if last_us >= 0 and row[0] - last_us > max_gap:
+            regs[1] = row[0] - last_us
+            return regs[1]
+        return None
 
     return (
         pre.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            track,
+            _event_time_fold((-1, -1), step, None, "gap_us"),
             GAP_RECORD_OUTPUT_SCHEMA,
             GAP_RECORD_STATE_SCHEMA,
             "append",

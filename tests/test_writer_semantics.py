@@ -260,25 +260,6 @@ def _assert_disjoint(ranges):
         assert prev_hi <= lo, f"overlapping file ranges: {ranges}"
 
 
-def test_overwrite_range_layout_yields_disjoint_file_ranges(spark, fmt):
-    """Each output file must cover a disjoint key range (that is what
-    makes footer min/max stats skip whole files), and the rewrite must
-    not lose or duplicate rows."""
-    tbl = "default.wp_range_layout"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # scrambled insertion order: layout must come from the writer
-    df = spark.range(0, 10_000).select(
-        ((F.col("id") * 7919) % 10_000).alias("k"), F.col("id").alias("payload")
-    )
-    fmt.overwrite_range_layout(df, tbl, ["k"], num_files=8)
-
-    ranges = _file_key_ranges(spark, tbl, "k")
-    assert len(ranges) > 1, "expected multiple files to prove disjointness"
-    _assert_disjoint(ranges)
-    assert spark.table(tbl).count() == 10_000
-    assert spark.table(tbl).select(F.count_distinct("k")).first()[0] == 10_000
-
-
 def test_optimize_layout_preserves_data_and_clusters(spark):
     """DDL maintenance form: rewrite an existing fragmented table into a
     range-clustered one atomically (tmp-swap), data intact."""
@@ -300,157 +281,3 @@ def test_optimize_layout_preserves_data_and_clusters(spark):
     got = spark.table(tbl)
     assert got.count() == 5_000
     assert got.where(F.col("k") < 100).count() == 100
-
-
-def test_overwrite_zorder_layout_bounds_every_column(spark, fmt):
-    """Z-order must give BOTH layout columns bounded per-file ranges
-    (small hyper-rectangles). Contrast: a lexicographic layout on (x, y)
-    leaves y spanning its full domain inside almost every file."""
-    tbl = "default.wp_zorder"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 100).alias("x"),
-        (F.col("id") / 100).cast("long").alias("y"),
-        F.col("id").alias("payload"),
-    )
-    fmt.overwrite_zorder_layout(df, tbl, ["x", "y"], num_files=16, bits=8)
-
-    assert spark.table(tbl).count() == 10_000
-    assert "__z" not in spark.table(tbl).columns
-    # domain is 0..99 per axis; files whose z-range straddles a major
-    # Morton boundary legitimately span a full axis, so the guarantee is
-    # statistical: the TYPICAL file covers a small rectangle on BOTH axes.
-    for key in ("x", "y"):
-        ranges = _file_key_ranges(spark, tbl, key)
-        assert len(ranges) > 4
-        spans = sorted(hi - lo for lo, hi in ranges)
-        assert spans[len(spans) // 2] <= 55, f"median {key} span: {spans}"
-        wide = sum(s > 60 for s in spans)
-        assert wide <= len(spans) // 4, f"{wide} wide-{key} files: {spans}"
-
-    # lexicographic control: same data range-clustered on (x, y) — the
-    # TRAILING column spans ~the whole domain in the typical file
-    ctl = "default.wp_zorder_ctl"
-    spark.sql(f"DROP TABLE IF EXISTS {ctl}")
-    fmt.overwrite_range_layout(df, ctl, ["x", "y"], num_files=16)
-    y_spans = sorted(
-        hi - lo for lo, hi in _file_key_ranges(spark, ctl, "y")
-    )
-    assert y_spans[len(y_spans) // 2] >= 90, (
-        f"control layout unexpectedly bounded y: {y_spans}"
-    )
-
-
-def test_z_value_guards(spark):
-    """Loud failures for the silent-corruption cases: bit-budget overflow
-    (Java << wraps mod 64), non-numeric columns (cast->NULL would zero
-    the column's contribution), and reserved-name collisions."""
-    from metadata_driven_etl_spark.io.writer import z_value
-
-    num = spark.range(10).select(
-        F.col("id").alias("a"), (F.col("id") * 2).alias("b")
-    )
-    with pytest.raises(ValueError, match="63 usable bits"):
-        z_value(num, ["a", "b"], bits=32)  # 64 interleaved bits
-    with pytest.raises(ValueError, match="non-orderable-numeric"):
-        z_value(num.withColumn("s", F.lit("x")), ["a", "s"])
-    with pytest.raises(ValueError, match="reserved"):
-        z_value(num.withColumn("__z", F.lit(0)), ["a"])
-    # date/timestamp columns are legal layout keys
-    dated = num.withColumn(
-        "d", F.date_add(F.to_date(F.lit("2024-01-01")), F.col("a").cast("int"))
-    )
-    assert z_value(dated, ["a", "d"], bits=8).where(
-        F.col("__z").isNotNull()
-    ).count() == 10
-
-
-def test_z_value_quantile_bucketing_handles_skew(spark, fmt):
-    """Quantile bucketing: on a heavily skewed column, linear bucketing
-    collapses most rows into one bucket (one giant z-run), while
-    quantile bucketing spreads rows ~evenly across buckets — so the
-    sorted layout keeps per-file ranges tight on the HOT part of the
-    domain. Also pins the mode's guards."""
-    from metadata_driven_etl_spark.io.writer import z_value
-
-    # Zipf-ish skew: 90% of rows dense in [0, 10), long tail to 1e6
-    df = spark.range(0, 10_000).select(
-        F.when(
-            F.col("id") % 10 < 9, (F.col("id") % 1000) / 100.0
-        )
-        .otherwise(((F.col("id") * 97) % 1_000_000).cast("double"))
-        .alias("k"),
-        F.col("id").alias("payload"),
-    )
-    lin = z_value(df, ["k"], bits=8, bucketing="linear")
-    qnt = z_value(df, ["k"], bits=8, bucketing="quantile")
-    assert "__qb_0" not in qnt.columns
-
-    def max_code_mass(zdf):
-        return (
-            zdf.groupBy("__z").count().agg(F.max("count")).first()[0]
-        )
-
-    # linear: the hot 90% (9000 rows) all lands in z-code 0; quantile:
-    # equal-mass bins cap every code's mass near n/256
-    assert max_code_mass(lin) >= 8_000
-    assert max_code_mass(qnt) <= 1_000, max_code_mass(qnt)
-    # and the hot range spreads across >= half the 256 buckets
-    hot_codes = qnt.where(F.col("k") < 10).select("__z").distinct().count()
-    assert hot_codes >= 128, hot_codes
-
-    # z-ordered write with quantile bucketing: hot-range predicate skips
-    # most files (per-file min/max stay tight inside the hot range)
-    tbl = "default.wp_zorder_qnt"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    fmt.overwrite_zorder_layout(
-        df, tbl, ["k"], num_files=16, bits=8, bucketing="quantile"
-    )
-    got = spark.table(tbl)
-    assert got.count() == 10_000
-    ranges = _file_key_ranges(spark, tbl, "k")
-    assert len(ranges) > 4
-    # files are either hot (max < 10) or tail (min >= 10): the skew
-    # boundary falls on a file boundary because buckets are equal-mass
-    hot_files = [r for r in ranges if r[1] < 10]
-    assert len(hot_files) >= len(ranges) // 2, ranges
-
-    with pytest.raises(ValueError, match="bits <= 8"):
-        z_value(df, ["k"], bits=12, bucketing="quantile")
-    with pytest.raises(ValueError, match="bucketing"):
-        z_value(df, ["k"], bits=8, bucketing="median")
-
-
-def test_z_value_null_policy_identical_across_modes(spark):
-    """NULL inputs land in bucket 0 in BOTH bucketing modes (ADVICE r6:
-    linear mode used to propagate NULL through frac/floor to a NULL __z
-    while quantile mode scored NULLs as bucket 0 — same data clustered
-    differently depending on the mode)."""
-    from metadata_driven_etl_spark.io.writer import z_value
-
-    df = spark.createDataFrame(
-        [(None, 1.0), (5.0, None), (1.0, 1.0), (9.0, 9.0), (None, None)],
-        "a double, b double",
-    )
-    for mode in ("linear", "quantile"):
-        out = z_value(df, ["a", "b"], bits=4, bucketing=mode)
-        zs = {
-            (r.a, r.b): r["__z"]
-            for r in out.select("a", "b", "__z").collect()
-        }
-        # __z is never NULL
-        assert all(z is not None for z in zs.values()), (mode, zs)
-        # all-NULL row interleaves two zero buckets -> __z == 0
-        assert zs[(None, None)] == 0, (mode, zs)
-        # NULL sorts at-or-below the column minimum (bucket 0); bit
-        # spreading is strictly monotone per coordinate, so with b fixed
-        # the NULL-a row can never z-sort ABOVE the min-a row
-        assert zs[(None, 1.0)] <= zs[(1.0, 1.0)], (mode, zs)
-    # and in linear mode NULL is exactly the min bucket
-    lin = {
-        (r.a, r.b): r["__z"]
-        for r in z_value(df, ["a", "b"], bits=4, bucketing="linear")
-        .select("a", "b", "__z")
-        .collect()
-    }
-    assert lin[(None, 1.0)] == lin[(1.0, 1.0)], lin
