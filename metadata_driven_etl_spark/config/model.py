@@ -462,80 +462,103 @@ class SilverTransform:
         )
 
 
-VALID_EVENT_ANALYSES = {
-    "funnel", "attribution", "sessions", "transitions", "cohorts",
-    "funnel_rates", "stickiness", "new_vs_returning",
-    "abandonment", "entry_exit",
-    "hourly_load", "dwell_time", "concurrent_peaks",
-    "growth_accounting", "arrival_disorder",
+_FUNNEL_PARAMS = (
+    "steps", "user_col", "type_col", "ts_col", "order_col", "window", "mode",
+)
+_SESSION_PARAMS = ("user_col", "ts_col", "order_col", "gap_seconds")
+# Each event analysis: (module under operators/, operator, its keyword
+# parameters). The gold layer calls ``operator(events, **{p: getattr(cfg,
+# p)})`` and resolves the name at call time, so this module imports no
+# operator. A parameter is an EventAnalysisConfig field or a property of
+# the same name. ``attribution`` maps each attribution_model to its row.
+EVENT_OPERATORS: dict[str, Any] = {
+    "funnel": ("temporal", "funnel_steps", _FUNNEL_PARAMS),
+    "funnel_rates": ("temporal", "funnel_rates", _FUNNEL_PARAMS),
+    "attribution": {
+        "last_touch": ("temporal", "attribute_last_touch", (
+            "conversion_type", "user_col", "ts_col", "type_col",
+            "order_col", "lookback_seconds",
+        )),
+        "time_decay": ("temporal", "attribute_time_decay", (
+            "conversion_type", "user_col", "ts_col", "type_col",
+            "lookback_days",
+        )),
+    },
+    "sessions": ("temporal", "session_kpis_daily", _SESSION_PARAMS),
+    "transitions": (
+        "cooccur", "transition_counts",
+        ("key_col", "type_col", "ts_col", "tiebreak"),
+    ),
+    "cohorts": ("temporal", "cohort_retention", ("user_col", "ts_col")),
+    "stickiness": (
+        "temporal", "stickiness_daily", ("user_col", "ts_col", "window_days"),
+    ),
+    "new_vs_returning": (
+        "temporal", "new_vs_returning", ("user_col", "ts_col"),
+    ),
+    "abandonment": ("temporal", "abandonment_daily", (
+        "intent_type", "convert_type", "user_col", "ts_col", "type_col",
+        "order_col", "gap_seconds",
+    )),
+    "entry_exit": ("temporal", "session_entry_exit", (
+        "user_col", "ts_col", "type_col", "order_col", "gap_seconds",
+    )),
+    "hourly_load": ("temporal", "hourly_load_profile", ("ts_col",)),
+    "dwell_time": ("temporal", "dwell_time_by_type", (
+        "user_col", "ts_col", "type_col", "order_col",
+    )),
+    "concurrent_peaks": (
+        "temporal", "concurrent_session_peaks", _SESSION_PARAMS,
+    ),
+    "growth_accounting": (
+        "temporal", "growth_accounting", ("user_col", "ts_col", "epoch_year"),
+    ),
+    "arrival_disorder": (
+        "temporal", "out_of_order_stats", ("ts_col", "type_col", "order_col"),
+    ),
 }
+VALID_EVENT_ANALYSES = set(EVENT_OPERATORS)
 VALID_FUNNEL_MODES = {"per_step", "from_first"}
-VALID_ATTRIBUTION_MODELS = {"last_touch", "time_decay"}
+VALID_ATTRIBUTION_MODELS = set(EVENT_OPERATORS["attribution"])
 VALID_FUNNEL_SCOPES = {"user", "session"}
-_FUNNEL_ANALYSES = {"funnel", "funnel_rates"}
+
+
+def _event_params(analysis: str) -> set[str]:
+    """Every operator parameter ``analysis`` reads (attribution: both
+    models')."""
+    row = EVENT_OPERATORS[analysis]
+    rows = row.values() if isinstance(row, dict) else (row,)
+    return {p for _, _, params in rows for p in params}
 
 
 @dataclass(frozen=True)
 class EventAnalysisConfig:
-    """The ``event:`` section of a gold ``model_type: event`` model —
-    declarative clickstream analytics over an event table, routed through
-    the operators the API exposes (operators/temporal.py funnel_steps /
-    attribute_last_touch / attribute_time_decay / session_kpis_daily), so
-    YAML and direct composition are provably the same computation
-    (e2e parity in tests/test_pipeline_e2e.py).
+    """The ``event:`` section of a gold ``model_type: event`` model:
+    declarative clickstream analytics over an event table. ``analysis``
+    names a row of ``EVENT_OPERATORS``, the operator the API exposes and
+    the knobs it reads, so YAML and direct composition are one computation
+    (e2e parity in tests/test_pipeline_e2e.py). What each one emits:
 
-    ``analysis``:
-    - ``funnel``: per-user ordered funnel depth over ``steps`` (emits
-      ``(user_col, funnel_step)``); ``funnel_mode`` picks the window rule
-      (``per_step`` re-arms at every step; ``from_first`` is ClickHouse
-      windowFunnel's whole-chain rule).
-    - ``attribution``: channel credit for conversions — ``last_touch``
-      (winner-take-all within ``lookback_days``; emits
-      ``(channel, n_conversions)``) or ``time_decay`` (every touch gets
-      an exact dyadic 2^(lookback−age) credit; emits
-      ``(channel, weight_sum, share)``).
-    - ``sessions``: daily session KPIs over ``gap_seconds``
-      sessionization (emits ``(day, n_sessions, n_bounces, bounce_rate,
-      total_dur_us, avg_dur_us)``).
-    - ``transitions``: the first-order Markov transition matrix over
-      per-user event sequences (emits ``(prev_type, next_type,
-      n_transitions, row_share)``) — next-action prediction and
-      anomalous-flow detection.
-    - ``cohorts``: weekly cohort retention (emits ``(cohort_week,
-      week_index, active_users)``).
-    - ``funnel_rates`` (r9, VERDICT r8 item 3): the funnel-chart readout
-      — per step, users reached, step-to-step conversion, cumulative
-      rate (emits ``(step, step_name, n_reached, step_rate,
-      cum_rate)``). Same funnel knobs as ``funnel``.
-    - ``stickiness`` (r9): daily DAU over trailing-``window_days`` MAU
-      (emits ``(day, dau, mau, stickiness)``).
-    - ``new_vs_returning`` (r9): per-day acquisition/retention split
-      (emits ``(day, new_users, returning_users)``).
-    - ``abandonment`` (r9): share of sessions with ``intent_type`` but
-      no ``conversion_type``, per session-start day over the
-      ``gap_seconds`` sessionizer (emits ``(day, n_intent_sessions,
-      n_abandoned, abandonment_rate)``).
-    - ``entry_exit`` (r9): first/last event type per session,
-      cross-tabulated (emits ``(entry_type, exit_type, n_sessions)``).
-    - ``hourly_load`` (r10, VERDICT r9 item 4): weekday × hour traffic
-      heatmap (emits ``(dow, hour, n_events, load_share)``).
-    - ``dwell_time`` (r10): gap to each user's next event, rolled up by
-      the type that held the attention (emits ``(type_col, n_dwells,
-      total_dwell_us, avg_dwell_sec)``).
-    - ``concurrent_peaks`` (r10): peak concurrent sessions per day via
-      the +1/−1 endpoint sweep over ``gap_seconds`` sessions (emits
-      ``(day, peak_concurrent)``).
-    - ``growth_accounting`` (r10): monthly new / retained /
-      resurrected / churned user flows (emits ``(month_index, n_new,
-      n_retained, n_resurrected, n_churned)``); ``epoch_year`` anchors
-      the integer month index.
+    - funnel: (user_col, funnel_step), per-user ordered depth over steps
+    - funnel_rates: (step, step_name, n_reached, step_rate, cum_rate)
+    - attribution: (channel, n_conversions) last_touch, or (channel,
+      weight_sum, share) time_decay
+    - sessions: (day, n_sessions, n_bounces, bounce_rate, total/avg_dur_us)
+    - transitions: (prev_type, next_type, n_transitions, row_share)
+    - cohorts: (cohort_week, week_index, active_users), weekly retention
+    - stickiness: (day, dau, mau, stickiness), MAU over window_days
+    - new_vs_returning: (day, new_users, returning_users)
+    - abandonment: (day, n_intent_sessions, n_abandoned, abandonment_rate)
+    - entry_exit: (entry_type, exit_type, n_sessions), per session
+    - hourly_load: (dow, hour, n_events, load_share), weekday × hour
+    - dwell_time: (type_col, n_dwells, total_dwell_us, avg_dwell_sec)
+    - concurrent_peaks: (day, peak_concurrent) sessions
+    - growth_accounting: (month_index, n_new/retained/resurrected/churned)
+    - arrival_disorder: (type_col, n_events, n_late, max/total_late_us)
 
-    ``scope`` (funnel and funnel_rates only): ``user`` (default) runs
-    the funnel over each user's whole history under the step ``window``;
-    ``session`` re-keys to (user, session) composites via the
-    ``gap_seconds`` sessionizer — "did they convert within one visit" —
-    and the session gap replaces the step clock (``window`` must be left
-    at its default; the session already bounds time).
+    ``scope: session`` (funnel analyses) re-keys to (user, session)
+    composites via the ``gap_seconds`` sessionizer, and the session gap
+    replaces the step clock, so ``window`` must be left unset.
     """
 
     analysis: str
@@ -544,7 +567,8 @@ class EventAnalysisConfig:
     ts_col: str = "ts"
     type_col: str = "event_type"
     order_col: str = "event_id"
-    # funnel knobs
+    # funnel knobs; funnel_mode per_step re-arms the window at every
+    # step, from_first is ClickHouse windowFunnel's whole-chain rule
     steps: tuple[str, ...] = ()
     window: str = "30 minutes"
     funnel_mode: str = "per_step"
@@ -563,6 +587,33 @@ class EventAnalysisConfig:
     # growth_accounting knob: month-index anchor year
     epoch_year: int = 1995
 
+    @property
+    def operator(self) -> tuple[str, str, tuple[str, ...]]:
+        """(module, operator, parameters): this analysis's table row."""
+        row = EVENT_OPERATORS[self.analysis]
+        return row[self.attribution_model] if isinstance(row, dict) else row
+
+    # operator parameters whose config field has another name or unit
+    @property
+    def mode(self) -> str:
+        return self.funnel_mode
+
+    @property
+    def convert_type(self) -> str:
+        return self.conversion_type
+
+    @property
+    def lookback_seconds(self) -> int:
+        return self.lookback_days * 86400
+
+    @property
+    def key_col(self) -> str:
+        return self.user_col
+
+    @property
+    def tiebreak(self) -> tuple[str, ...]:
+        return (self.order_col,)
+
     @staticmethod
     def from_dict(d: dict[str, Any], model_id: str) -> "EventAnalysisConfig":
         an = d.get("analysis")
@@ -576,13 +627,14 @@ class EventAnalysisConfig:
             f"model {model_id}: event model needs source_table "
             "(the events table to analyze)",
         )
+        reads = _event_params(an)
         steps = d.get("steps") or ()
         if isinstance(steps, str):
             steps = (steps,)
         fm = d.get("funnel_mode", "per_step")
         am = d.get("attribution_model", "last_touch")
         win = str(d.get("window", "30 minutes"))
-        if an in _FUNNEL_ANALYSES:
+        if "window" in reads:
             # validate the interval at LOAD time (every other knob
             # does): a malformed string would otherwise fail deep
             # inside the Spark INTERVAL expression with an opaque
@@ -599,7 +651,7 @@ class EventAnalysisConfig:
                 f"model {model_id}: funnel window must look like "
                 f"'<n> minutes/hours/days', got {win!r}",
             )
-        if an in _FUNNEL_ANALYSES:
+        if "steps" in reads:
             _require(
                 len(steps) >= 2,
                 f"model {model_id}: funnel analysis needs >= 2 steps, "
@@ -614,33 +666,35 @@ class EventAnalysisConfig:
                 f"model {model_id}: funnel_mode must be one of "
                 f"{sorted(VALID_FUNNEL_MODES)}, got {fm!r}",
             )
-        else:
-            _require(
-                not steps,
-                f"model {model_id}: steps only apply to funnel analyses",
-            )
         scope = d.get("scope", "user")
         _require(
             scope in VALID_FUNNEL_SCOPES,
             f"model {model_id}: scope must be one of "
             f"{sorted(VALID_FUNNEL_SCOPES)}, got {scope!r}",
         )
-        if scope != "user":
-            _require(
-                an in _FUNNEL_ANALYSES,
-                f"model {model_id}: scope only applies to funnel "
-                "analyses",
+        # a knob only some analyses read is an error elsewhere; ``scope``
+        # picks the step clock, so it goes where ``window`` is read
+        for knob, given in (
+            ("steps", bool(steps)),
+            ("scope", scope != "user"),
+            ("intent_type", "intent_type" in d),
+            ("window_days", "window_days" in d),
+            ("epoch_year", "epoch_year" in d),
+        ):
+            param = "window" if knob == "scope" else knob
+            readers = sorted(
+                a for a in EVENT_OPERATORS if param in _event_params(a)
             )
+            _require(
+                not given or an in readers,
+                f"model {model_id}: {knob} only applies to analysis "
+                + " or ".join(readers),
+            )
+        if scope != "user":
             _require(
                 "window" not in d,
                 f"model {model_id}: scope session replaces the step "
                 "window with the session gap — don't set window",
-            )
-        if "intent_type" in d:
-            _require(
-                an == "abandonment",
-                f"model {model_id}: intent_type only applies to "
-                "analysis abandonment",
             )
         if an == "abandonment":
             _require(
@@ -650,19 +704,7 @@ class EventAnalysisConfig:
                 "intent_type and conversion_type",
             )
         wd = d.get("window_days", 30)
-        if "window_days" in d:
-            _require(
-                an == "stickiness",
-                f"model {model_id}: window_days only applies to "
-                "analysis stickiness",
-            )
         ey = d.get("epoch_year", 1995)
-        if "epoch_year" in d:
-            _require(
-                an == "growth_accounting",
-                f"model {model_id}: epoch_year only applies to "
-                "analysis growth_accounting",
-            )
         _require(
             isinstance(ey, int) and not isinstance(ey, bool)
             and 1900 <= ey <= 2200,
@@ -842,16 +884,6 @@ class GoldModel:
                 f"model {mid}: aggregate aliases {gk_clash} collide with "
                 "group_keys",
             )
-            _require(
-                not d.get("scd2_attrs"),
-                f"model {mid}: scd2_attrs only applies to refresh_type "
-                "scd2",
-            )
-            _require(
-                not d.get("event"),
-                f"model {mid}: event: section only applies to "
-                "model_type event",
-            )
         elif rt == "scd2":
             _require(
                 mt == "sql",
@@ -886,16 +918,6 @@ class GoldModel:
                 f"model {mid}: {clash} collide with the SCD2 validity "
                 "columns",
             )
-            bad = [k for k in delta_knobs if d.get(k)]
-            _require(
-                not bad,
-                f"model {mid}: {bad} only apply to refresh_type delta",
-            )
-            _require(
-                not d.get("event"),
-                f"model {mid}: event: section only applies to "
-                "model_type event",
-            )
             sum_cols = ()
         else:
             _require(
@@ -919,26 +941,25 @@ class GoldModel:
                 _require(
                     d.get("sql_query"), f"model {mid}: missing sql_query"
                 )
-                _require(
-                    not d.get("event"),
-                    f"model {mid}: event: section only applies to "
-                    "model_type event",
-                )
             _require(
                 rt != "incremental" or pk,
                 f"model {mid}: incremental refresh needs primary_keys",
             )
-            bad = [k for k in delta_knobs if d.get(k)]
-            _require(
-                not bad,
-                f"model {mid}: {bad} only apply to refresh_type delta",
-            )
-            _require(
-                not d.get("scd2_attrs"),
-                f"model {mid}: scd2_attrs only applies to refresh_type "
-                "scd2",
-            )
             sum_cols = ()
+        # each kind's knobs are errors on the other kinds
+        bad = [k for k in delta_knobs if d.get(k)]
+        _require(
+            rt == "delta" or not bad,
+            f"model {mid}: {bad} only apply to refresh_type delta",
+        )
+        _require(
+            rt == "scd2" or not d.get("scd2_attrs"),
+            f"model {mid}: scd2_attrs only applies to refresh_type scd2",
+        )
+        _require(
+            mt == "event" or not d.get("event"),
+            f"model {mid}: event: section only applies to model_type event",
+        )
         pb = d.get("partition_by") or ()
         if isinstance(pb, str):
             pb = (pb,)
@@ -970,17 +991,16 @@ class GoldModel:
 
 @dataclass(frozen=True)
 class LayerDefaults:
-    """``default:`` block — per-layer spark conf + paths."""
+    """``default:`` block — per-layer spark conf. Other keys (the
+    reference's table paths) load and are ignored."""
 
     spark_conf: dict[str, str] = field(default_factory=dict)
-    extra: dict[str, Any] = field(default_factory=dict)
 
     @staticmethod
     def from_dict(d: dict[str, Any] | None) -> "LayerDefaults":
         d = d or {}
         conf = {str(k): str(v) for k, v in (d.get("spark_conf") or {}).items()}
-        extra = {k: v for k, v in d.items() if k != "spark_conf"}
-        return LayerDefaults(spark_conf=conf, extra=extra)
+        return LayerDefaults(spark_conf=conf)
 
 
 @dataclass(frozen=True)

@@ -190,8 +190,11 @@ def optimize_layout(
     SURVEY.md §2.10; exact file-range pruning on the leading column).
     After the rewrite each data file covers a disjoint key range, so
     selective scans open only matching files (parquet footer min/max).
-    Same atomic tmp-table swap as :func:`compact_table`; at 100 TB run it
-    per partition, never whole-table."""
+    Same tmp-table rewrite as :func:`compact_table`, which is NOT atomic:
+    ``_swap_rewrite`` runs ``DROP TABLE`` and then ``ALTER TABLE ...
+    RENAME``, so the table is missing between the two statements and a
+    failure there loses it (publishing by a catalog swap is ROADMAP item
+    3). At 100 TB run it per partition, never whole-table."""
     from metadata_driven_etl_spark.io.writer import range_cluster
 
     _check_ident(table)

@@ -737,7 +737,6 @@ def connected_components(
     b_col: str = "id_b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    check_every: int = 2,
 ) -> DataFrame:
     """Cluster ids for the near-dup graph: (id, cluster_id = min reachable id).
 
@@ -786,9 +785,9 @@ def connected_components(
     is still a reachable node id ≤ the node's own id (so labels are
     well-formed and any two nodes with EQUAL labels are truly connected —
     no false merges, ever), but two nodes of one component may still
-    carry different labels (under-merged). ``check_every`` is retained
-    for API compatibility; contraction needs one action per outer round
-    regardless (the class-edge count IS the convergence signal). Pinned by
+    carry different labels (under-merged). Contraction needs one action
+    per outer round (the class-edge count IS the convergence signal).
+    Pinned by
     ``tests/test_operators_props.py::test_cc_max_iter_exhaustion_partial_labels``.
     """
     _truncate = lambda df: _materialize(df, checkpoint_dir)  # noqa: E731

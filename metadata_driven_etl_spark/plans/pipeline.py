@@ -22,6 +22,7 @@ fixed per SURVEY.md §2.14:
 from __future__ import annotations
 
 import dataclasses
+import importlib
 import re
 import time
 from collections.abc import Iterator, Sequence
@@ -424,153 +425,36 @@ class GoldLayer(_LayerBase):
         )
 
     def _event_frame(self, m: GoldModel) -> DataFrame:
-        """``model_type: event`` — dispatch the declared clickstream
-        analysis to the SAME operators the API exposes
-        (operators/temporal.py), so a YAML event model and a direct
-        composition are one computation (e2e parity in
-        test_pipeline_e2e.py).  The analyses are window-based shapes a
-        plain ``sql_query`` transform cannot express declaratively
-        (stacked funnel windows, binned range join, gap sessionizer)."""
+        """``model_type: event`` — call the declared analysis's operator
+        (its ``config.model.EVENT_OPERATORS`` row), the SAME function the
+        API exposes, so a YAML event model and a direct composition are
+        one computation (e2e parity in test_pipeline_e2e.py). The name is
+        looked up at call time, so a wrapped module attribute is the one
+        called."""
         from metadata_driven_etl_spark.operators import (
             temporal as temporal_ops,
         )
 
         e = m.event
+        module, name, params = e.operator
+        kwargs = {p: getattr(e, p) for p in params}
         events = self.ctx.spark.table(e.source_table)
-        if e.analysis in ("funnel", "funnel_rates"):
-            user_col, window = e.user_col, e.window
-            if e.scope == "session":
-                # re-key to (user, session) composites; the session gap
-                # bounds the chain instead of the step clock (an
-                # interval >> any session span: order alone gates)
-                events = temporal_ops.session_scoped(
-                    events,
-                    user_col=e.user_col,
-                    ts_col=e.ts_col,
-                    order_col=e.order_col,
-                    gap_seconds=e.gap_seconds,
-                )
-                user_col, window = "_sk", "3650 days"
-            op = (
-                temporal_ops.funnel_steps
-                if e.analysis == "funnel"
-                else temporal_ops.funnel_rates
-            )
-            return op(
-                events,
-                list(e.steps),
-                user_col=user_col,
-                type_col=e.type_col,
-                ts_col=e.ts_col,
-                order_col=e.order_col,
-                window=window,
-                mode=e.funnel_mode,
-            )
-        if e.analysis == "stickiness":
-            return temporal_ops.stickiness_daily(
-                events,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                window_days=e.window_days,
-            )
-        if e.analysis == "new_vs_returning":
-            return temporal_ops.new_vs_returning(
-                events, user_col=e.user_col, ts_col=e.ts_col
-            )
-        if e.analysis == "abandonment":
-            return temporal_ops.abandonment_daily(
-                events,
-                intent_type=e.intent_type,
-                convert_type=e.conversion_type,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                type_col=e.type_col,
-                order_col=e.order_col,
-                gap_seconds=e.gap_seconds,
-            )
-        if e.analysis == "entry_exit":
-            return temporal_ops.session_entry_exit(
-                events,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                type_col=e.type_col,
-                order_col=e.order_col,
-                gap_seconds=e.gap_seconds,
-            )
-        if e.analysis == "hourly_load":
-            return temporal_ops.hourly_load_profile(events, ts_col=e.ts_col)
-        if e.analysis == "dwell_time":
-            return temporal_ops.dwell_time_by_type(
-                events,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                type_col=e.type_col,
-                order_col=e.order_col,
-            )
-        if e.analysis == "concurrent_peaks":
-            return temporal_ops.concurrent_session_peaks(
+        if e.scope == "session":
+            # funnel only: re-key to (user, session) composites; the
+            # session gap bounds the chain instead of the step clock (an
+            # interval >> any session span: order alone gates)
+            events = temporal_ops.session_scoped(
                 events,
                 user_col=e.user_col,
                 ts_col=e.ts_col,
                 order_col=e.order_col,
                 gap_seconds=e.gap_seconds,
             )
-        if e.analysis == "growth_accounting":
-            return temporal_ops.growth_accounting(
-                events,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                epoch_year=e.epoch_year,
-            )
-        if e.analysis == "arrival_disorder":
-            return temporal_ops.out_of_order_stats(
-                events,
-                ts_col=e.ts_col,
-                type_col=e.type_col,
-                order_col=e.order_col,
-            )
-        if e.analysis == "attribution":
-            if e.attribution_model == "last_touch":
-                return temporal_ops.attribute_last_touch(
-                    events,
-                    conversion_type=e.conversion_type,
-                    user_col=e.user_col,
-                    ts_col=e.ts_col,
-                    type_col=e.type_col,
-                    order_col=e.order_col,
-                    lookback_seconds=e.lookback_days * 86400,
-                )
-            return temporal_ops.attribute_time_decay(
-                events,
-                conversion_type=e.conversion_type,
-                user_col=e.user_col,
-                ts_col=e.ts_col,
-                type_col=e.type_col,
-                lookback_days=e.lookback_days,
-            )
-        if e.analysis == "transitions":
-            from metadata_driven_etl_spark.operators import (
-                cooccur as cooccur_ops,
-            )
-
-            return cooccur_ops.transition_counts(
-                events,
-                e.user_col,
-                e.type_col,
-                e.ts_col,
-                tiebreak=(e.order_col,),
-            )
-        if e.analysis == "cohorts":
-            return temporal_ops.cohort_retention(
-                events, user_col=e.user_col, ts_col=e.ts_col
-            )
-        return temporal_ops.session_kpis_daily(
-            events,
-            user_col=e.user_col,
-            ts_col=e.ts_col,
-            order_col=e.order_col,
-            gap_seconds=e.gap_seconds,
+            kwargs.update(user_col="_sk", window="3650 days")
+        ops = importlib.import_module(
+            f"metadata_driven_etl_spark.operators.{module}"
         )
+        return getattr(ops, name)(events, **kwargs)
 
     def _model(self, m: GoldModel, run_date: str) -> int:
         if m.refresh_type == "delta":

@@ -454,9 +454,10 @@ def gap_record_stateful(
     threshold approximates badly.
 
     Ordering, late data and the pending buffer follow
-    :func:`_event_time_fold`. State per key: two longs (-1 until the
-    first event and the first gap) + the watermark-bounded pending
-    buffer.
+    :func:`_event_time_fold`. State per key: two longs, the last event
+    time and the record gap (-2 before the first event, -1 before the
+    first gap, so an event time of any sign counts) + the
+    watermark-bounded pending buffer.
     """
     pre = events.where(F.col(user_col).isNotNull()).select(
         F.col(type_col).alias("event_type"),
@@ -467,7 +468,9 @@ def gap_record_stateful(
     def step(regs, row):
         last_us, max_gap = regs
         regs[0] = row[0]
-        if last_us >= 0 and row[0] - last_us > max_gap:
+        if max_gap == -2:
+            regs[1] = -1
+        elif row[0] - last_us > max_gap:
             regs[1] = row[0] - last_us
             return regs[1]
         return None
@@ -476,7 +479,7 @@ def gap_record_stateful(
         pre.withWatermark("ts", watermark)
         .groupBy("event_type")
         .applyInPandasWithState(
-            _event_time_fold((-1, -1), step, None, "gap_us"),
+            _event_time_fold((-1, -2), step, None, "gap_us"),
             GAP_RECORD_OUTPUT_SCHEMA,
             GAP_RECORD_STATE_SCHEMA,
             "append",

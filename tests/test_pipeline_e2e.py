@@ -1547,7 +1547,7 @@ def test_gold_event_config_validation():
                 "steps": ["a", "a"],
             }}
         )
-    with pytest.raises(ConfigError, match="steps only apply"):
+    with pytest.raises(ConfigError, match="steps only applies"):
         GoldModel.from_dict(
             {**base, "event": {
                 "analysis": "sessions", "source_table": "s", "steps": ["a"],

@@ -124,13 +124,13 @@ def capture(spark, monkeypatch):
     return run
 
 
-def _frame(value_col, rows, unit):
-    """Projected rows ``(offset_s, event_id, value)`` with ``ts`` in
-    datetime64[``unit``]."""
+def _frame(value_col, rows, unit, t0=T0):
+    """Projected rows ``(offset_s, event_id, value)`` with ``ts`` (``t0``
+    plus the offset) in datetime64[``unit``]."""
     pdf = pd.DataFrame(
         {
             "event_type": ["t"] * len(rows),
-            "ts": pd.to_datetime([T0 + r[0] for r in rows], unit="s").astype(
+            "ts": pd.to_datetime([t0 + r[0] for r in rows], unit="s").astype(
                 f"datetime64[{unit}]"
             ),
             "event_id": [r[1] for r in rows],
@@ -195,6 +195,19 @@ def test_track_drops_late_rows_buffers_and_flushes_in_event_time_order(
     *regs, pend = state.value
     assert json.loads(pend) == []
     assert [json.loads(v) if isinstance(v, str) else v for v in regs] == registers
+
+
+def test_gap_record_first_gap_alerts_before_1970(capture):
+    """The first gap always alerts, also for a type whose events all fall
+    before 1970 (negative event times)."""
+    got = capture(stateful.gap_record_stateful)
+    t0 = -1_700_000_000
+    state = FakeState()
+    state.watermark_ms = (t0 - 1) * 1000
+    frames = [_frame(None, [(0, 1), (100, 2), (400, 3)], "us", t0)]
+    assert _call(got, state, frames) == []
+    state.hasTimedOut = True
+    assert _call(got, state) == [(2, 100_000_000), (3, 300_000_000)]
 
 
 LOAD_WITHOUT_PACKAGE = textwrap.dedent(
