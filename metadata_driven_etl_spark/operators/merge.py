@@ -7,6 +7,9 @@ semantics through a seam:
 
 - ``upsert(target, source, keys)`` — the pure relational form
   (source ∪ (target ▷ source)), used for computation and for the oracle.
+- ``validate_unique_keys_arrow`` / ``upsert_arrow`` — the same pair on
+  Arrow tables on the driver, for the streaming upsert sink's driver copy
+  of its target (``io.writer.ArrowMirror``); same results, same error.
 - the table-level merge is ``TableFormat.merge`` (io.writer): on parquet
   it upserts into a checkpointed copy of the table and overwrites the
   table from it; with Delta it is ``DeltaTable.merge``.
@@ -21,8 +24,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 
 class DuplicateSourceKeysError(ValueError):
@@ -62,6 +69,56 @@ def upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFra
     """
     kept = target.join(F.broadcast(source.select(*keys).distinct()), on=list(keys), how="left_anti")
     return source.unionByName(kept)
+
+
+def validate_unique_keys_arrow(source: pa.Table, keys: Sequence[str]) -> int:
+    """:func:`validate_unique_keys` on an Arrow table: return its row
+    count, or raise :class:`DuplicateSourceKeysError` with the same
+    message. Null keys group together, as in Spark's ``groupBy``. When
+    several keys share the largest count, the one reported may differ."""
+    keys = list(keys)
+    counts = source.select(keys).group_by(keys, use_threads=False).aggregate(
+        [([], "count_all")]
+    )
+    n = counts["count_all"]
+    worst = pc.max(n).as_py() or 0
+    if worst > 1:
+        i = pc.index(n, worst).as_py()
+        key = {k: _row_value(counts[k][i]) for k in keys}
+        raise DuplicateSourceKeysError(
+            f"merge source has {worst} rows for key {key}"
+        )
+    return source.num_rows
+
+
+def _row_value(scalar: pa.Scalar):
+    """An Arrow value as a Spark ``Row`` holds it: a ``TimestampType``
+    value (UTC in Arrow) is naive local time."""
+    t = scalar.type
+    if pa.types.is_timestamp(t) and t.tz and scalar.is_valid:
+        micros = scalar.cast(pa.timestamp("us", tz=t.tz)).value
+        return TimestampType().fromInternal(micros)
+    return scalar.as_py()
+
+
+def upsert_arrow(
+    target: pa.Table | None, source: pa.Table, keys: Sequence[str]
+) -> pa.Table:
+    """:func:`upsert` on Arrow tables: ``source`` first, then the rows of
+    ``target`` whose key is not in ``source``, in their order. A null key
+    matches nothing, as in :func:`upsert`'s join, so a null-keyed target
+    row is kept. ``target`` None is an empty target. ``source`` must have
+    ``target``'s schema and be unique per key
+    (:func:`validate_unique_keys_arrow`)."""
+    if target is None:
+        return source
+    keys = list(keys)
+    row = "__upsert_target_row"
+    numbered = target.select(keys).append_column(
+        row, pa.array(np.arange(target.num_rows, dtype=np.int64))
+    )
+    kept = numbered.join(source.select(keys), keys, join_type="left anti")
+    return pa.concat_tables([source, target.take(kept.sort_by(row)[row])])
 
 
 def scd2_apply(

@@ -5,31 +5,32 @@ The canonical streaming-medallion ingest pattern: a streaming aggregation
 so the table always holds the latest value per key — the streaming
 counterpart of the gold layer's incremental refresh (plans/pipeline.py).
 
-The merge is ``table_format.stream_merger``, and each call persists its
-batch for its own length: its first action is the key check
-(``operators.merge.validate_unique_keys``), which runs the stateful plan
-once, fills the cache and returns the row count. An empty batch stops
-there and writes nothing; a batch with a duplicate key raises
-``DuplicateSourceKeysError``, as ``TableFormat.merge`` does. The rest
-reads the cache.
+The merge is ``table_format.stream_merger``. On parquet it is an
+``io.writer.ArrowMirror``: the query keeps its target as an Arrow table on
+the driver, loaded from the table's files once (no Spark job). Each
+micro-batch is collected once with ``toArrow()``, which is the batch's one
+Spark job and runs the stateful plan, then key-checked and upserted in
+pyarrow (``operators.merge.validate_unique_keys_arrow`` /
+``upsert_arrow``), and the new target is published as one Parquet file
+through ``io.commit``, the commit path the metadata stores share: temp
+file, rename, delete the older file, refresh. An empty batch stops after
+the collect and writes nothing; a batch with a duplicate key raises
+``DuplicateSourceKeysError`` before anything is written, as
+``TableFormat.merge`` does. So a micro-batch costs one Spark job and the
+table holds one file. The target and each batch live in driver memory:
+``ArrowMirror`` gives the figures measured up to 1M rows; larger targets
+belong on Delta.
 
-On the parquet fallback the merger is an ``io.writer.MirroredTable``, the
-same code as a batch ``TableFormat.merge`` but with its copy kept: the
-query keeps the target's rows as a local checkpoint, read from the table
-once, upserts each batch into it and overwrites the table through
-``io.writer``'s one checkpointed rewrite (so a failed batch leaves the
-table intact), keeping its partition spec. No table file is read per
-batch: at most four Spark jobs (key check, broadcast of the batch keys,
-checkpoint, write) and one file per batch on an unpartitioned target.
-The copy is the whole target and each batch rewrites all of it, so time
-and memory grow with the target's size: the streaming benchmark's target
-has about 50 rows, and ``MirroredTable`` gives the figures measured up
-to 1M rows. Delta targets use Delta's file-pruned native MERGE instead.
+A partitioned parquet target keeps an ``io.writer.MirroredTable`` (a
+checkpointed copy in executor storage, at most four Spark jobs per
+batch), and Delta targets use Delta's file-pruned native MERGE.
 
 Single-writer contract: while the query runs it owns its target. A
-write from anywhere else is not in the mirror and is overwritten by the
-next batch. The mirror is released when the query terminates (stopped,
-drained or failed); a restarted query reloads it from the table.
+write from anywhere else is not in the copy and is overwritten by the
+next batch. The copy is released when the query terminates (stopped,
+drained or failed); a restarted query reloads it from the table. A
+reader of the table during a batch's commit may see the old and the new
+file together for the instant between the rename and the delete.
 Checkpointing makes the sink exactly-once per micro-batch id: on restart,
 a replayed batch re-merges the same rows idempotently (upsert is
 idempotent for deterministic aggregates).
@@ -42,7 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQueryListener
 
-from metadata_driven_etl_spark.io.writer import MirroredTable, TableFormat
+from metadata_driven_etl_spark.io.writer import ArrowMirror, TableFormat
 
 
 def refresh_owner_tables(owner, *tables: str) -> None:
@@ -63,10 +64,11 @@ def refresh_owner_tables(owner, *tables: str) -> None:
 
 
 class _ReleaseOnTermination(StreamingQueryListener):
-    """Releases a query's mirror once the query run has terminated, and
-    deregisters itself. The event arrives asynchronously after the end."""
+    """Releases a query's copy of its target once the query run has
+    terminated, and deregisters itself. The event arrives asynchronously
+    after the end."""
 
-    def __init__(self, streams, run_id: str, mirror: MirroredTable) -> None:
+    def __init__(self, streams, run_id: str, mirror: ArrowMirror) -> None:
         self.streams, self.run_id, self.mirror = streams, run_id, mirror
 
     def onQueryStarted(self, event) -> None:
@@ -114,10 +116,10 @@ def merge_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     query = writer.start()
-    # the parquet merger is a MirroredTable's bound merge: its copy of the
+    # the parquet merger is an ArrowMirror's bound merge: its copy of the
     # target outlives every batch, so the query's end releases it
     mirror = getattr(merge_batch, "__self__", None)
-    if isinstance(mirror, MirroredTable):
+    if isinstance(mirror, ArrowMirror):
         listener = _ReleaseOnTermination(owner.streams, query.runId, mirror)
         owner.streams.addListener(listener)
         if not query.isActive:  # ended before the listener could hear it
