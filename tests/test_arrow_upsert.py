@@ -42,7 +42,7 @@ def _checked(check, frame):
 
 @given(target=ROWS, source=ROWS)
 @settings(
-    max_examples=15,
+    max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
